@@ -543,13 +543,26 @@ def make_winnow_pos_udf(cfg: CascadeConfig):
 # signs, IVF cell assignments, and rankings — match the expression path to
 # the last bit (tests/test_kernels_parity.py pins this).
 #
-# Transport is mapInArrow, NOT pandas_udf: a list<double> column reaches a
-# pandas UDF as a Series of per-row numpy objects, and re-stacking them is a
-# Python loop that costs MORE than the interpreted fold it replaces
-# (profiled: 12.3 s pandas-UDF vs 8.2 s HOF on 561k dim-768 pairs).  A
-# mapInArrow RecordBatch instead exposes the whole column as ONE contiguous
-# Arrow buffer — np.frombuffer + reshape, zero per-row Python work.
+# Transport is Arrow, NOT pandas_udf: a list<double> column reaches a pandas
+# UDF as a Series of per-row numpy objects, and re-stacking them is a Python
+# loop that costs MORE than the interpreted fold it replaces (profiled:
+# 12.3 s pandas-UDF vs 8.2 s HOF on 561k dim-768 pairs).  An Arrow batch
+# instead exposes the whole column as ONE contiguous buffer — np.frombuffer
+# + reshape, zero per-row Python work.
+#
+# The ANN top-k scorer (ann_group_topk_arrow) works per GROUP, not per pair:
+# one applyInArrow call receives a whole SRP bucket or IVF cell, scores all
+# its (query, member) pairs as one seqfold matmul and returns only each
+# query's local top-k.  Each vector therefore crosses the JVM→Arrow boundary
+# once per group it belongs to, where per-pair Arrow scoring
+# (score_pairs_arrow) moves two full vectors per candidate PAIR — the
+# transfer that made per-pair Arrow scoring lose to the JVM fold.
 # ---------------------------------------------------------------------------
+
+
+# float64 elements per seqfold product chunk (~32 MB): bounds every
+# temporary the embedding kernels allocate, whatever the batch or group size
+_SEQFOLD_CHUNK_ELEMS = 4_000_000
 
 
 def _seqfold_dots(X: np.ndarray, M: np.ndarray) -> np.ndarray:
@@ -558,18 +571,22 @@ def _seqfold_dots(X: np.ndarray, M: np.ndarray) -> np.ndarray:
     NOT a BLAS matmul: BLAS reorders/FMA-fuses the additions, np.add.reduce
     sums pairwise — both change low-order bits.  Products here are IEEE-exact
     (same two doubles multiplied), then cumsum accumulates them left to
-    right, matching F.aggregate / DuckDB list_sum.  Chunked so the (c, m, d)
-    product tensor stays ~32 MB regardless of batch size.
+    right, matching F.aggregate / DuckDB list_sum.  Chunked on BOTH operands
+    so the (rows, cols, d) product tensor stays ~32 MB however large n or m
+    grows (an IVF group holds up to max_cell_size members).
     """
     n, d = X.shape
     m = M.shape[0]
     out = np.empty((n, m), dtype=np.float64)
-    chunk = max(1, 4_000_000 // max(m * d, 1))
-    MT = np.ascontiguousarray(M, dtype=np.float64)[None, :, :]
-    for i in range(0, n, chunk):
-        P = X[i : i + chunk, None, :] * MT
-        np.cumsum(P, axis=2, out=P)
-        out[i : i + chunk] = P[:, :, -1]
+    M = np.ascontiguousarray(M, dtype=np.float64)
+    cols = max(1, min(m, _SEQFOLD_CHUNK_ELEMS // max(d, 1)))
+    rows = max(1, _SEQFOLD_CHUNK_ELEMS // max(cols * d, 1))
+    for j in range(0, m, cols):
+        MT = M[None, j : j + cols, :]
+        for i in range(0, n, rows):
+            P = X[i : i + rows, None, :] * MT
+            np.cumsum(P, axis=2, out=P)
+            out[i : i + rows, j : j + cols] = P[:, :, -1]
     return out
 
 
@@ -584,8 +601,9 @@ def _list_col_matrix(arr, dim: int | None) -> np.ndarray:
     """Zero-copy (rows, dim) float64 view of an Arrow list<double> column.
 
     arr.flatten() resolves list offsets (sliced batches included) into one
-    contiguous values buffer; reshape is free.  dim=None infers it from the
-    batch.  Callers guarantee no nulls and fixed dim (embedding columns) —
+    contiguous values buffer; reshape is free.  A ChunkedArray (a column of
+    a grouped pa.Table) is concatenated once first.  dim=None infers it from
+    the batch.  Callers guarantee no nulls and fixed dim (embedding columns) —
     enforced here because silently mis-reshaping would corrupt every
     downstream score.
     """
@@ -593,6 +611,8 @@ def _list_col_matrix(arr, dim: int | None) -> np.ndarray:
 
     if arr.null_count:
         raise ValueError("embedding column contains nulls on the kernel path")
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
     flat = arr.flatten()
     if dim is None:
         if len(flat) % max(len(arr), 1):
@@ -600,8 +620,6 @@ def _list_col_matrix(arr, dim: int | None) -> np.ndarray:
         dim = len(flat) // max(len(arr), 1)
     if len(flat) != len(arr) * dim:
         raise ValueError(f"ragged embedding column (expected dim {dim})")
-    if isinstance(flat, pa.ChunkedArray):
-        flat = flat.combine_chunks()
     return np.asarray(flat, dtype=np.float64).reshape(len(arr), dim)
 
 
@@ -713,7 +731,9 @@ def ivf_assign_arrow(
                 continue
             X = _list_col_matrix(b.column(vec_col), dim)
             qn = np.sqrt(_seqfold_self_dots(X))
-            cos = _seqfold_dots(X, C) / (qn[:, None] * cn[None, :])
+            den = qn[:, None] * cn[None, :]
+            _check_nonzero_norms(den)
+            cos = _seqfold_dots(X, C) / den
             order = np.lexsort(
                 (np.broadcast_to(cids, cos.shape), -cos), axis=-1
             )[:, :n_probe]
@@ -733,6 +753,101 @@ def ivf_assign_arrow(
 
     return df.select(F.col(id_col).cast("long").alias(id_col), vec_col).mapInArrow(
         assign, "_id long, cell bigint, _probes array<bigint>"
+    )
+
+
+def _check_nonzero_norms(den: np.ndarray) -> None:
+    """Cosine denominators must be nonzero: the expression twins divide
+    under ANSI mode and raise DIVIDE_BY_ZERO on a zero vector, so the
+    kernels fail just as loudly instead of emitting NaN."""
+    if not den.all():
+        raise ZeroDivisionError(
+            "[DIVIDE_BY_ZERO] zero-norm embedding vector in a cosine"
+        )
+
+
+def _local_topk(q_ids, Q, n_ids, M, k: int):
+    """Each query's top-k members by (cosine desc, n_id asc), self excluded.
+
+    Needs at least one query and one member.  n_ids must be ascending, so
+    a column index orders like its n_id and ties break by id.  Queries go
+    in row blocks of at most _SEQFOLD_CHUNK_ELEMS cosines, and the
+    selection is a partition to the k-th best value per row followed by an
+    exact sort of only the entries at or above it (ties at the boundary
+    included): O(m) per query, not O(m log m).  Returns (q_id, n_id,
+    cosine) arrays.
+    """
+    qn = np.sqrt(_seqfold_self_dots(Q))
+    nn = np.sqrt(_seqfold_self_dots(M))
+    m = len(n_ids)
+    kk = min(k, m)
+    block = max(1, _SEQFOLD_CHUNK_ELEMS // m)
+    parts = []
+    for i in range(0, len(q_ids), block):
+        qi = q_ids[i : i + block]
+        is_self = qi[:, None] == n_ids[None, :]
+        den = qn[i : i + block, None] * nn[None, :]
+        _check_nonzero_norms(den[~is_self])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = _seqfold_dots(Q[i : i + block], M) / den
+        neg = -cos
+        neg[is_self] = np.inf  # self sorts last, so it is never taken over a member
+        kth = np.partition(neg, kk - 1, axis=1)[:, kk - 1 : kk]
+        r, c = np.nonzero(neg <= kth)  # row-major: c ascending within a row
+        order = np.lexsort((c, neg[r, c], r))
+        r, c = r[order], c[order]
+        rank = np.arange(len(r)) - np.searchsorted(r, r)
+        keep = (rank < kk) & ~is_self[r, c]
+        r, c = r[keep], c[keep]
+        parts.append((qi[r], n_ids[c], cos[r, c]))
+    return tuple(np.concatenate(x) for x in zip(*parts))
+
+
+def ann_group_topk_arrow(
+    rows, group_cols: list[str], k: int, dim: int, probe_col: str | None = None
+):
+    """(group_cols..., _id, _vec[, probe_col]) → (q_id, n_id, cosine): each
+    query's LOCAL top-k inside its group, one applyInArrow call per group.
+
+    probe_col=None (an SRP bucket): every row is both a query and a member,
+    the bucket self-join.  Otherwise (an IVF cell split by probe salt) rows
+    with probe_col true are the queries and the others the members.
+
+    Cosines are seqfold dots over the product of the two seqfold norms —
+    the same bits as the expression fold and score_pairs_arrow.  Local
+    top-k is exact for the global one: a member of a query's top-k over
+    the union of its groups ranks no lower inside the one group it came
+    from, so the caller's per-query rank <= k over all groups' rows (after
+    dropping a pair repeated by several groups) equals the pair path's.
+    A zero-norm vector in any scored pair raises, like the fold does.
+    """
+    import pyarrow as pa
+
+    schema = pa.schema([
+        ("q_id", pa.int64()), ("n_id", pa.int64()), ("cosine", pa.float64()),
+    ])
+
+    def topk(table):
+        ids = table.column("_id").to_numpy()
+        X = _list_col_matrix(table.column("_vec"), dim)
+        if probe_col is None:
+            queries = members = np.arange(len(ids))
+        else:
+            is_probe = table.column(probe_col).to_numpy(zero_copy_only=False)
+            queries, members = np.flatnonzero(is_probe), np.flatnonzero(~is_probe)
+        members = members[np.argsort(ids[members])]
+        if not len(members) or not len(queries):
+            return schema.empty_table()
+        q_id, n_id, cos = _local_topk(
+            ids[queries], X[queries], ids[members], X[members], k
+        )
+        return pa.Table.from_arrays(
+            [pa.array(q_id), pa.array(n_id), pa.array(cos)], schema=schema
+        )
+
+    cols = [*group_cols, "_id", "_vec"] + ([probe_col] if probe_col else [])
+    return rows.select(*cols).groupBy(*group_cols).applyInArrow(
+        topk, "q_id long, n_id long, cosine double"
     )
 
 

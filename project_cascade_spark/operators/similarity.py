@@ -4,9 +4,27 @@ Two paths, as the training-data-pipeline brief requires:
 - brute_force_topk: exact cosine top-k — the correctness baseline, DuckDB
   oracle-able (list_cosine_similarity).  Cross join + window top-k; cost
   O(n*m), acceptable for a query set much smaller than the corpus.
-- srp_lsh_topk: sign-random-projection (SRP) LSH buckets — the scale path.
-  Hyperplanes are derived deterministically from the seed so results are
-  reproducible; candidates are scored exactly inside their bucket.
+- srp_lsh_topk / ivf_topk: sign-random-projection (SRP) LSH buckets and
+  IVF cells — the scale paths.  Hyperplanes and centroids are
+  deterministic, so results are reproducible; candidates are scored
+  exactly inside their bucket / probed cell.
+
+The two scale paths score candidates one of two ways, with identical
+output rows:
+- use_kernel=False (the DuckDB oracle's twin): an ids-only bucket/cell
+  equi-join builds the distinct (q_id, n_id) candidate pairs, both vectors
+  join onto every pair and a Catalyst fold scores it — the shape of the
+  oracle's pair-join SQL;
+- use_kernel=True (grouped top-k): no pair table at all.  The capped
+  bucket/cell rows carry their vectors into ONE Arrow kernel call per
+  group (functions/kernels.ann_group_topk_arrow), which scores the group as
+  a seqfold matmul and returns each query's local top-k; one q_id exchange
+  then drops pairs repeated across groups and ranks.  Exact, because a
+  member of a query's global top-k (cosine desc, n_id asc) over the union
+  of its groups is in the local top-k of every group that holds it.  It
+  beats per-pair scoring (fold or Arrow) because each vector crosses into
+  the kernel once per group, not once per candidate pair, and the dedup
+  shuffle carries <= k rows per (query, group) instead of every pair.
 """
 
 from __future__ import annotations
@@ -37,7 +55,11 @@ def _vec_norm(vec_col: str):
 def _score_joined(
     joined: DataFrame, score_with_arrow: bool, dim: int | None = None
 ) -> DataFrame:
-    """(q_id, n_id, q_vec, n_vec, _qn, _nn) → (q_id, n_id, cosine).
+    """(q_id, n_id, q_vec, n_vec, _qn, _nn) → (q_id, n_id, cosine), one
+    score per materialized pair (brute_force_topk and the use_kernel=False
+    ANN paths; the use_kernel=True ANN paths never build pairs — they score
+    whole buckets/cells with kernels.ann_group_topk_arrow, see the module
+    docstring).
 
     Default is the Catalyst dot fold over pre-hoisted norms — measured
     FASTER than Arrow for per-pair scoring, because each pair must move two
@@ -73,23 +95,56 @@ def _scoring_sides(corpus: DataFrame, id_col: str, vec_col: str):
 
 
 def _dedup_pairs_q_partitioned(pairs: DataFrame, per_core: int = 4) -> DataFrame:
-    """Distinct (q_id, n_id) pairs, hash-partitioned by q_id in ONE exchange.
+    """Distinct (q_id, n_id) rows, hash-partitioned by q_id in ONE exchange.
 
-    Fuses what were three exchanges of the candidate set into one
-    (guide §2.4): repartition(n, q_id) satisfies the dedup aggregate's
-    clustering requirement (q_id ⊆ {q_id, n_id}), the explicit partition
-    count is the parallelism floor AQE byte-coalescing would otherwise
-    erase (ids-only pairs are tiny bytes — measured before the floor
-    existed: 561k dim-768 scorings coalesced onto 4 tasks, a 23 s
-    straggler on a 37 s query), and the q_id layout survives the scoring
-    joins (broadcast at bench scale; n_id-join-first at cluster scale) so
-    the per-query top-k window needs no exchange of the scored rows.
-    Per-query candidate counts are bounded by the bucket/cell caps, so
-    keying the one exchange by q_id cannot concentrate a degenerate key."""
+    Fuses what were three exchanges into one (guide §2.4):
+    repartition(n, q_id) satisfies the dedup aggregate's clustering
+    requirement (q_id ⊆ {q_id, n_id}) AND the per-query top-k window's, so
+    neither adds an exchange.  The explicit partition count is the
+    parallelism floor AQE byte-coalescing would otherwise erase (ids-only
+    pairs are tiny bytes — measured before the floor existed: 561k dim-768
+    scorings coalesced onto 4 tasks, a 23 s straggler on a 37 s query).
+    Two callers: the pair paths dedup ids-only candidates here and score
+    them afterwards (the vector joins — broadcast at bench scale, n_id-join
+    first at cluster scale — keep the q_id layout); the grouped-kernel
+    paths dedup already-scored (q_id, n_id, cosine) local top-k rows, whose
+    repeats carry the same cosine bits.  Per-query row counts are bounded
+    by the bucket/cell caps, so keying by q_id cannot concentrate a
+    degenerate key."""
     par = pairs.sparkSession.sparkContext.defaultParallelism
     return pairs.repartition(max(per_core * par, 16), "q_id").dropDuplicates(
         ["q_id", "n_id"]
     )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, cosine) → per-query rank <= k by (cosine desc, n_id
+    asc), cosine rounded to 6 places — the output contract of every ANN
+    operator here and of their DuckDB oracles."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", F.round("cosine", 6).alias("cosine"), "rank")
+    )
+
+
+def _grouped_topk(
+    rows: DataFrame, corpus: DataFrame, id_col: str, vec_col: str,
+    group_cols: list[str], k: int, dim: int, probe_col: str | None = None,
+) -> DataFrame:
+    """The use_kernel=True scorer: ids-only group rows (_id, group_cols...)
+    pick up their vectors, each group runs one local top-k kernel call,
+    and one q_id exchange dedups and ranks (exactness: module docstring)."""
+    from ..functions.kernels import ann_group_topk_arrow
+
+    vecs = corpus.select(
+        F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_vec")
+    )
+    local = ann_group_topk_arrow(
+        rows.join(vecs, "_id"), group_cols, k, dim, probe_col
+    )
+    return _rank_topk(_dedup_pairs_q_partitioned(local), k)
 
 
 def brute_force_topk(
@@ -121,12 +176,7 @@ def brute_force_topk(
     scored = _score_joined(
         q.crossJoin(c).filter(F.col("q_id") != F.col("n_id")), use_kernel
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def add_srp_buckets(
@@ -217,7 +267,6 @@ def ivf_topk(
     cap_salt_expr=None,
     centroids: np.ndarray | None = None,
     use_kernel: bool = False,
-    score_with_arrow: bool = False,
     scoring_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: the cell-partitioned counterpart to
@@ -237,18 +286,33 @@ def ivf_topk(
     over the corpus scan — no UDF, no shuffle.  use_kernel=True swaps the
     per-row interpreted cosine folds (n_cells of them per row — the CPU
     bottleneck at dim 768+) for one Arrow seqfold-matmul kernel per batch,
-    bit-identical (functions/kernels.make_ivf_assign_udf).
+    bit-identical (functions/kernels.ivf_assign_arrow), AND scores with the
+    grouped top-k kernel instead of the pair join (module docstring).
 
     Scale shape:
-    - the cell equi-join carries IDS ONLY ((n_id, cell) vs exploded
-      (q_id, probe_cell)); vectors re-join once per side after the
-      candidate set is deduped — no shuffle moves a vector twice;
     - cells are capped at max_cell_size via the SALTED cap window
       (minhash_lsh.cap_bucket_rows) so a degenerate centroid that attracts
       a huge cluster can neither go quadratic nor funnel the cap sort
       through one task (north_rule skew salting);
+    - use_kernel=False: the cell equi-join carries IDS ONLY ((n_id, cell)
+      vs exploded (q_id, probe_cell)); vectors re-join once per side after
+      the candidate set is deduped — no shuffle moves a vector twice;
+    - use_kernel=True: a kernel group is (cell, probe salt), the salt
+      pmod(xxhash64(q_id), cap_salts) splitting a cell's probes while its
+      members are replicated to every salt — a hot cell spreads over
+      cap_salts tasks (the split AQE's skew join gave the pair join), and a
+      group holds <= max_cell_size members plus one salt's share of probes;
     - ties (equal cosine to two centroids) break toward the smaller cell
       id, matching the oracle's ORDER BY cosine DESC, cid ASC.
+
+    scoring_corpus, if given, must hold exactly the same (id, vec) rows as
+    corpus — only the layout may differ.  It exists so a caller that
+    balanced corpus for the per-row assignment scan (a repartition) can
+    hand the scorer the unshuffled source: the vector join is broadcast
+    (bench scale) or re-shuffled by its key (cluster scale) either way, so
+    the balanced layout would be one full-vector exchange of pure overhead.
+    Nothing checks the contract: different rows silently drop candidates
+    or score them with the wrong vectors.
     """
     if centroids is not None:
         cents = [(int(i), [float(x) for x in centroids[i]])
@@ -306,6 +370,23 @@ def ivf_topk(
             cells, ["cell"], "_id", max_cell_size,
             n_salts=cap_salts, salt=cap_salt_expr,
         )
+    scoring = scoring_corpus if scoring_corpus is not None else corpus
+    if use_kernel:
+        salts = max(1, cap_salts)
+        every_salt = F.sequence(F.lit(0).cast("long"), F.lit(salts - 1).cast("long"))
+        probe_rows = assigned.select(
+            "_id", F.explode("_probes").alias("cell"),
+            F.pmod(F.xxhash64("_id"), F.lit(salts)).alias("_salt"),
+            F.lit(True).alias("_probe"),
+        )
+        member_rows = cells.select(
+            "_id", "cell", F.explode(every_salt).alias("_salt"),
+            F.lit(False).alias("_probe"),
+        )
+        return _grouped_topk(
+            probe_rows.unionByName(member_rows), scoring, id_col, vec_col,
+            ["cell", "_salt"], k, dim, probe_col="_probe",
+        )
     probes = assigned.select(
         F.col("_id").alias("q_id"), F.explode("_probes").alias("cell")
     )
@@ -314,22 +395,12 @@ def ivf_topk(
         .filter(F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id")
     )
-    # scoring_corpus: same rows as corpus, but WITHOUT any caller-side
-    # balancing repartition — the sides are broadcast-built (bench scale)
-    # or re-shuffled by their join key (cluster scale) either way, so a
-    # pre-spread layout is one full-vector exchange of pure overhead
-    qv, nv = _scoring_sides(
-        scoring_corpus if scoring_corpus is not None else corpus, id_col, vec_col
-    )
+    qv, nv = _scoring_sides(scoring, id_col, vec_col)
     # n_id join FIRST, q_id join LAST: if the vector joins ever shuffle
     # (non-broadcast corpus at cluster scale), the scored frame leaves the
     # last join partitioned by q_id — the window's requirement
-    scored = _score_joined(cand.join(nv, "n_id").join(qv, "q_id"), score_with_arrow, dim)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cosine", 6).alias("cosine"), "rank")
+    return _rank_topk(
+        _score_joined(cand.join(nv, "n_id").join(qv, "q_id"), False), k
     )
 
 
@@ -368,7 +439,6 @@ def srp_lsh_topk(
     cap_salts: int = 16,
     cap_salt_expr=None,
     use_kernel: bool = False,
-    score_with_arrow: bool = False,
     scoring_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate all-pairs top-k: L independent SRP hash tables, candidate
@@ -385,9 +455,16 @@ def srp_lsh_topk(
       rows capped out of a bucket in one table still reach it through the
       other L-1 tables;  cap_salt_expr overrides the salt (oracle-parity
       path passes an md5-derived salt DuckDB can reproduce);
-    - the bucket self-join and the cross-table dropDuplicates carry IDS
-      ONLY — full vectors are re-joined once per side afterwards, so no
-      shuffle ever moves a vector more than once.
+    - use_kernel=False: the bucket self-join and the cross-table
+      dropDuplicates carry IDS ONLY — full vectors are re-joined once per
+      side afterwards, so no shuffle ever moves a vector more than once;
+    - use_kernel=True: one Arrow scan buckets all L tables, and each capped
+      (table, bucket) — at most max_bucket_size rows — is one grouped top-k
+      kernel call (module docstring): a vector is shuffled once per table,
+      and only <= k scored rows per (query, bucket) reach the q_id dedup.
+
+    scoring_corpus: same contract as ivf_topk's — exactly the (id, vec)
+    rows of corpus, without the caller-side balancing repartition.
     """
     # bucket table carries (id, table, bucket) — no vectors
     if use_kernel:
@@ -422,6 +499,11 @@ def srp_lsh_topk(
             b, ["srp_table", "srp_bucket"], "_id", max_bucket_size,
             n_salts=cap_salts, salt=cap_salt_expr,
         )
+    scoring = scoring_corpus if scoring_corpus is not None else corpus
+    if use_kernel:
+        return _grouped_topk(
+            b, scoring, id_col, vec_col, ["srp_table", "srp_bucket"], k, dim
+        )
     # EAGER materialization: the bucket self-join references this subtree
     # from both sides; a lazy persist would let the two concurrently
     # launched join-side stages each first-touch the cache and run the
@@ -435,17 +517,8 @@ def srp_lsh_topk(
         .select("q_id", "n_id")
     )
     # vectors join in exactly once per side, post-dedup; n_id first / q_id
-    # LAST so a shuffled vector join leaves the q_id layout for the window.
-    # scoring_corpus: same rows, minus any caller-side balancing
-    # repartition (broadcast-built or join-shuffled either way — see
-    # ivf_topk)
-    qv, nv = _scoring_sides(
-        scoring_corpus if scoring_corpus is not None else corpus, id_col, vec_col
-    )
-    scored = _score_joined(cand.join(nv, "n_id").join(qv, "q_id"), score_with_arrow, dim)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cosine", 6).alias("cosine"), "rank")
+    # LAST so a shuffled vector join leaves the q_id layout for the window
+    qv, nv = _scoring_sides(scoring, id_col, vec_col)
+    return _rank_topk(
+        _score_joined(cand.join(nv, "n_id").join(qv, "q_id"), False), k
     )

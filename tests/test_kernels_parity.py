@@ -134,19 +134,51 @@ def test_srp_buckets_kernel_matches_expr(spark):
             assert kern[(r["vec_id"], t)] == r["srp_bucket"]
 
 
+def _emb_with_dups(spark, n=150, n_vecs=10, copies=4):
+    """_emb plus `copies` exact copies of each of the first n_vecs vectors
+    under new ids: every query sees equal cosines to a vector and its
+    copies, and a copy's own top-k is all ties, so the order must break
+    them on n_id."""
+    emb = _emb(spark, n)
+    src = emb.filter(F.col("vec_id") < n_vecs)
+    for c in range(1, copies + 1):
+        emb = emb.unionByName(src.withColumn("vec_id", F.col("vec_id") + 100_000 * c))
+    return emb
+
+
+def _assert_paths_equal(topk, emb, **kw):
+    """The grouped-kernel path must equal the pair-join expression path
+    row for row."""
+    expr = sorted(map(tuple, topk(emb, "vec_id", "embedding", use_kernel=False, **kw).collect()))
+    kern = sorted(map(tuple, topk(emb, "vec_id", "embedding", use_kernel=True, **kw).collect()))
+    assert expr and kern == expr, kw
+
+
 def test_srp_lsh_topk_kernel_path_parity(spark):
+    """Grouped top-k kernel == pair-join fold: plain geometry, a binding
+    bucket cap, cosine ties on duplicated vectors, and k larger than most
+    buckets (a query takes every member its buckets hold)."""
     from project_cascade_spark.operators.similarity import srp_lsh_topk
 
     emb = _emb(spark)
-    kw = dict(dim=64, k=3, n_planes=4, n_tables=4, seed=7)
-    expr = srp_lsh_topk(emb, "vec_id", "embedding", use_kernel=False, **kw)
-    kern = srp_lsh_topk(emb, "vec_id", "embedding", use_kernel=True, **kw)
-    assert sorted(map(tuple, expr.collect())) == sorted(map(tuple, kern.collect()))
+    dups = _emb_with_dups(spark)
+    base = dict(dim=64, k=3, n_planes=4, n_tables=4, seed=7)
+    _assert_paths_equal(srp_lsh_topk, emb, **base)
+    # 2 planes: ~45 rows per bucket, capped at 16 (4 salts x 4)
+    _assert_paths_equal(
+        srp_lsh_topk, dups, **{**base, "n_planes": 2, "max_bucket_size": 16, "cap_salts": 4}
+    )
+    _assert_paths_equal(srp_lsh_topk, dups, **{**base, "k": 5})
+    # 6 planes: 64 buckets of ~3 rows, k=20 exceeds them
+    _assert_paths_equal(srp_lsh_topk, dups, **{**base, "n_planes": 6, "n_tables": 2, "k": 20})
 
 
 def test_ivf_topk_kernel_path_parity(spark):
     """Both quantizers (id-prefix and trained k-means), both scoring paths:
-    identical output rows."""
+    identical output rows — also under a binding cell cap, cosine ties on
+    duplicated vectors, k larger than the probed cells, and the hot-cell
+    geometry of test_ivf_cells_capped (2 cells, 1 probe), where every
+    cell's probes split across the salt groups."""
     import numpy as np
 
     from project_cascade_spark.operators.similarity import (
@@ -155,6 +187,7 @@ def test_ivf_topk_kernel_path_parity(spark):
     )
 
     emb = _emb(spark)
+    dups = _emb_with_dups(spark)
     sample = np.stack([
         np.asarray(r["embedding"])
         for r in emb.filter(F.col("vec_id") < 64).orderBy("vec_id").collect()
@@ -162,9 +195,42 @@ def test_ivf_topk_kernel_path_parity(spark):
     trained = train_ivf_centroids(sample, n_cells=8)
     for cents in (None, trained):
         kw = dict(dim=64, k=3, n_cells=8, n_probe=2, centroids=cents)
-        expr = ivf_topk(emb, "vec_id", "embedding", use_kernel=False, **kw)
-        kern = ivf_topk(emb, "vec_id", "embedding", use_kernel=True, **kw)
-        assert sorted(map(tuple, expr.collect())) == sorted(map(tuple, kern.collect()))
+        _assert_paths_equal(ivf_topk, emb, **kw)
+    kw = dict(dim=64, k=3, n_cells=8, n_probe=2, centroids=trained)
+    _assert_paths_equal(ivf_topk, dups, **{**kw, "max_cell_size": 8, "cap_salts": 4})
+    _assert_paths_equal(ivf_topk, dups, **kw)
+    _assert_paths_equal(ivf_topk, dups, **{**kw, "n_cells": 32, "n_probe": 1, "k": 40})
+    _assert_paths_equal(
+        ivf_topk, _emb(spark, 100), dim=64, k=50, n_cells=2, n_probe=1,
+        max_cell_size=10,
+    )
+    _assert_paths_equal(ivf_topk, _emb(spark, 100), dim=64, k=50, n_cells=2, n_probe=1)
+
+
+def test_ann_zero_vector_raises_on_both_paths(spark):
+    """A zero vector has no cosine: the pair fold raises DIVIDE_BY_ZERO
+    under ANSI, and the kernels must raise too rather than emit NaN."""
+    import pytest
+
+    from project_cascade_spark.operators.similarity import ivf_topk, srp_lsh_topk
+
+    emb = _emb(spark, 60)
+    zero = spark.createDataFrame(
+        [(99_999, [0.0] * 64)], "vec_id long, embedding array<double>"
+    )
+    emb = emb.select("vec_id", "embedding").unionByName(zero)
+    for use_kernel in (False, True):
+        # 2 planes: the zero vector's all-ones bucket holds ~15 others
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            srp_lsh_topk(
+                emb, "vec_id", "embedding", dim=64, k=3, n_planes=2,
+                n_tables=2, use_kernel=use_kernel,
+            ).collect()
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            ivf_topk(
+                emb, "vec_id", "embedding", dim=64, k=3, n_cells=4,
+                n_probe=2, use_kernel=use_kernel,
+            ).collect()
 
 
 def test_minhash_similar_texts_share_bands(spark):

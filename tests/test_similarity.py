@@ -1,5 +1,7 @@
 """ANN operators: brute-force exactness + SRP-LSH recall on real testdata."""
 
+import re
+
 import pyspark.sql.functions as F
 
 from project_cascade_spark.operators.similarity import (
@@ -131,28 +133,63 @@ def test_ivf_cells_capped(spark):
     assert mx <= 10
 
 
+def _plan_nodes(df):
+    """Formatted physical plan → (tree text, {node id: details text})."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    tree, _, details = plan.partition("\n\n")
+    nodes = {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", details, re.M | re.S)
+    }
+    return tree, nodes
+
+
+def _node_ids(text, name):
+    """Ids of the plan-tree nodes called `name` (a regex), node-anchored:
+    "Exchange" matches neither BroadcastExchange nor ReusedExchange."""
+    return [int(i) for i in re.findall(rf"\b{name}\b[^(\n]*\((\d+)\)", text)]
+
+
 def test_ann_candidate_exchange_fusion_plan(spark):
-    """Round-6 §6b plan contract: the ids-only candidate set crosses ONE
-    exchange (repartition by q_id feeds the dedup aggregate AND the
-    per-query top-k window — guide §2.4), and the window sits on the join
-    output with no exchange below it.  A regression re-introducing the
-    dropDuplicates exchange, the separate floor repartition, or the
-    window re-shuffle shows up as extra shuffle Exchange nodes."""
+    """Plan contract of the use_kernel=True ANN paths: candidates are never
+    materialized as pairs.  No join keys on the bucket/cell remain (the
+    only join is the _id vector lookup); each capped bucket / (cell, salt)
+    group is one FlatMapGroupsInArrow call; and below the Window exactly
+    ONE shuffle Exchange — hash-partitioned by q_id — sits between that
+    kernel and the Window, feeding both the cross-group dedup aggregate
+    and the per-query top-k.  Shuffle exchanges are counted node-anchored
+    (Broadcast/ReusedExchange do not match): the salted cap window, the
+    group-key exchange and the q_id exchange — 3 in total at this size,
+    where the vector lookup broadcasts."""
+    from project_cascade_spark.operators.similarity import ivf_topk
+
     emb = _emb(spark)
-    out = srp_lsh_topk(
-        emb, "vec_id", "embedding", dim=64, k=3, n_planes=4, n_tables=2,
-        seed=1, use_kernel=True,
-    )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    tree = plan.split("\n\n")[0]
-    n_shuffle = tree.count("Exchange") - tree.count("BroadcastExchange")
-    # one fused candidate exchange; the scoring sides may add their own
-    # (non-broadcast) exchanges at other scales, but at this size they
-    # broadcast — so exactly 1 shuffle exchange survives
-    assert n_shuffle == 1, f"expected 1 shuffle Exchange, got {n_shuffle}:\n{tree}"
-    # the Window must not sit above an Exchange (its q_id clustering is
-    # satisfied by the fused repartition surviving the broadcast joins)
-    above_window = tree.split("Window")[0]
-    assert "Exchange" not in above_window.replace("BroadcastExchange", ""), tree
+    plans = {
+        "srp": srp_lsh_topk(
+            emb, "vec_id", "embedding", dim=64, k=3, n_planes=4, n_tables=2,
+            seed=1, use_kernel=True,
+        ),
+        "ivf": ivf_topk(
+            emb, "vec_id", "embedding", dim=64, k=3, n_cells=4, n_probe=2,
+            use_kernel=True,
+        ),
+    }
+    for name, out in plans.items():
+        tree, nodes = _plan_nodes(out)
+        n_shuffle = len(_node_ids(tree, "Exchange"))
+        assert n_shuffle == 3, f"{name}: expected 3 shuffle Exchanges, got {n_shuffle}:\n{tree}"
+        for j in _node_ids(tree, r"\w*Join"):
+            keys = re.findall(r"^(?:Left|Right) keys.*$", nodes[j], re.M)
+            assert keys and not re.search(r"\b(srp_bucket|srp_table|cell)#", " ".join(keys)), (
+                name, nodes[j],
+            )
+        # formatted explain prints root first: the subtree BELOW the Window
+        # is the text after its node line, down to the grouped kernel
+        below = tree[tree.index("Window ("):]
+        [kernel] = _node_ids(below, "FlatMapGroupsInArrow")
+        between = below[: below.index(f"FlatMapGroupsInArrow ({kernel})")]
+        exchanges = _node_ids(between, "Exchange")
+        assert len(exchanges) == 1, (name, tree)
+        assert "hashpartitioning(q_id#" in nodes[exchanges[0]], (name, nodes[exchanges[0]])
