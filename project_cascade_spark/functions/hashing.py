@@ -31,14 +31,6 @@ def shingle_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda s: hash60(s) % MERSENNE31)
 
 
-def fast_shingle_hashes(shingles: Column) -> Column:
-    """xxhash64-based variant, ~50x cheaper than the md5 primitive.
-
-    Used by the code pipeline where only internal consistency matters;
-    the md5 form exists for DuckDB oracle parity (documents queries)."""
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE31)))
-
-
 def fast_kgram_hashes(col: Column, k: int) -> Column:
     """xxhash64 k-gram hashes (pipeline-internal winnowing)."""
     n = F.length(col)

@@ -215,11 +215,10 @@ def _window_hash_span(ps0, pinv, s, e) -> np.ndarray:
 
 
 def make_char_shingle_hash_udf(k: int):
-    """pandas UDF: norm string → sorted-distinct hashed k-char shingles as
-    array<int> in [0, MERSENNE31) — the kernel twin of
-    array_distinct(fast_shingle_hashes(char_shingles(norm, k))).
+    """pandas UDF: norm string → the sorted-distinct hashed k-char shingles
+    of char_shingles(norm, k), as array<int> in [0, MERSENNE31).
 
-    Semantics match the expression chain structurally: one hash per k-char
+    Semantics match char_shingles structurally: one hash per k-char
     window (rows shorter than k hash the whole text as their single
     shingle, so no row is ever empty), distinct per row.  Values are
     rolling-hash-derived rather than xxhash64 (internal-only; see the
@@ -267,15 +266,22 @@ def make_char_shingle_hash_udf(k: int):
 
 def make_winnow_pos_text_udf(cfg: CascadeConfig, max_occ_per_doc: int = 0):
     """pandas UDF: norm string → winnowing prints WITH char positions,
-    array<struct<fp,pos>> — the fused kernel twin of
-    make_winnow_pos_udf(fast_kgram_hashes(norm)).
+    array<struct<fp,pos>> (pos = char offset of the selected k-gram).
 
     One batch pass computes every k-gram rolling hash (replacing the JVM
     substring+xxhash64 per char position), then the per-row sliding-window
-    argmin winnow.  The MOSS alignment guarantee is hash-function-agnostic
-    (equal grams ⇒ equal hashes is all it needs), and anchors are verified
-    downstream by real character comparison, so exactness of the
-    long-substring pass is unchanged.
+    argmin winnow.
+
+    Positions are what make MOSS-style anchored verification possible: for
+    any substring of length >= w+k-1 shared by two documents, every window
+    of w grams fully inside the shared region sees the same gram sequence
+    in both documents, so argmin picks the same gram at the same RELATIVE
+    offset — both sides emit an (fp, pos) anchor pair that is ALIGNED
+    inside the shared region.  Char-wise extension from that anchor then
+    recovers the exact maximal common substring (operators/suffix.py).
+    The guarantee is hash-function-agnostic (equal grams ⇒ equal hashes is
+    all it needs), and anchors are verified downstream by real character
+    comparison, so the long-substring pass is exact.
 
     max_occ_per_doc > 0 applies the per-(doc, print) occurrence cap
     (earliest positions kept) HERE, row-locally — identical semantics to
@@ -488,45 +494,6 @@ def make_winnow_udf(cfg: CascadeConfig):
         return pd.Series(out)
 
     return winnow
-
-
-def make_winnow_pos_udf(cfg: CascadeConfig):
-    """pandas UDF: array<long> k-gram hashes → array<struct<fp,pos>> —
-    winnowing prints WITH the char offset of each selected k-gram (gram j
-    starts at char j: fast_kgram_hashes slides one char at a time).
-
-    Positions are what make MOSS-style anchored verification possible: for
-    any substring of length >= w+k-1 shared by two documents, every window
-    of w grams fully inside the shared region sees the same gram sequence
-    in both documents, so argmin picks the same gram at the same RELATIVE
-    offset — both sides emit an (fp, pos) anchor pair that is ALIGNED
-    inside the shared region.  Char-wise extension from that anchor then
-    recovers the exact maximal common substring (operators/suffix.py).
-    """
-    w = cfg.winnow_w
-
-    @pandas_udf("array<struct<fp: bigint, pos: int>>")
-    def winnow_pos(grams: pd.Series) -> pd.Series:
-        out = []
-        for xs in grams:
-            if xs is None or len(xs) == 0:
-                out.append(None)
-                continue
-            x = np.asarray(xs, dtype=np.int64)
-            m = len(x)
-            if m <= w:
-                p = int(x.argmin())
-                out.append([{"fp": int(x[p]), "pos": p}])
-                continue
-            # argmin per window (first-min tie-break: deterministic and
-            # content-local, which is all the alignment guarantee needs),
-            # dedup'd by selected gram index
-            rel = np.lib.stride_tricks.sliding_window_view(x, w).argmin(axis=1)
-            pos = np.unique(rel + np.arange(m - w + 1))
-            out.append([{"fp": int(x[p]), "pos": int(p)} for p in pos])
-        return pd.Series(out)
-
-    return winnow_pos
 
 
 # ---------------------------------------------------------------------------

@@ -106,7 +106,8 @@ def fingerprint_anchor_pairs(
     anchors = the (pos_a, pos_b) occurrence combinations of the shared
     prints.  The ALIGNED anchor inside a shared substring of length
     >= winnow_k + winnow_w - 1 is guaranteed to be among them (see
-    make_winnow_pos_udf), so anchored extension is an exact verifier.
+    kernels.make_winnow_pos_text_udf), so anchored extension is an exact
+    verifier.
 
     Two bounds keep the per-pair anchor list from going quadratic
     (round-3 verdict's "unbounded under within-document repetition"):

@@ -13,6 +13,14 @@ verified edges are on disk), and clustering reruns connected components
 over the merged edge set — an edges-proportional cost, orders of magnitude
 below re-shingling at realistic dup rates.
 
+Each delta stage calls the pipeline's own stage function (plans/pipeline.py:
+hash_input, norm_groups, prepare, minhash_signatures, short_simhash,
+positional_prints, tag_candidates, verify_edges) on the batch, so hashing,
+shingling, signatures, prints and edge thresholds have one definition on
+both paths.  What append adds is the restriction to new representatives:
+anti-joins against corpus state, new × all linkage joins for candidates,
+and semi-join prefilters ahead of verification.
+
 Exactness: assignments equal a from-scratch run over base ∪ batch
 (tests/test_append.py asserts frame equality).  The argument:
 - norm-group REPS are sticky (a group that existed in the base keeps its
@@ -76,20 +84,26 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import CascadeConfig
-from ..functions.hashing import hamming60, simhash_chunks
-from ..functions.text import normalize_code
 from ..operators.connected_components import connected_components
-from ..operators.dedup import add_content_hash
 from ..operators.minhash_lsh import candidate_pairs_linkage
-from ..operators.simhash import add_simhash
+from ..operators.simhash import simhash_candidate_pairs_linkage
 from ..operators.suffix import (
-    add_fingerprints_pos,
     fingerprint_anchor_pairs_linkage,
     verify_long_substring_anchored,
 )
-from ..operators.verify import jaccard_verify
 from ..sources.sinks import StageStore
-from .pipeline import SHORT_JACCARD
+from .pipeline import (
+    balance_source,
+    hash_input,
+    minhash_signatures,
+    norm_groups,
+    positional_prints,
+    prepare,
+    representatives,
+    short_simhash,
+    tag_candidates,
+    verify_edges,
+)
 
 # base stage → the per-epoch delta stage holding that table's new rows
 BASE_STAGES = [
@@ -103,6 +117,8 @@ DELTA_OF = {
     "03a_signatures": "signatures_new",
     "04a_simhash": "short_new",
     "05_edges": "new_edges",
+    "08a_fingerprints_pos": "fps_new",
+    "08_substring_pairs": "substring_new",
 }
 
 
@@ -184,24 +200,11 @@ def _read_state(base: StageStore, stage: str, epoch: int, cols=None) -> DataFram
 def _substring_enabled(base: StageStore, epoch: int) -> bool:
     """The side pass is maintained iff the base produced it AND every prior
     epoch maintained it (a chain with a gap cannot produce the full union)."""
-    ok = base.exists("08a_fingerprints_pos") and base.exists("08_substring_pairs")
-    for e in range(1, epoch + 1):
-        ok = ok and base.exists(f"e{e}_fps_new") and base.exists(f"e{e}_substring_new")
-    return ok
-
-
-def _fps_state(base: StageStore, epoch: int) -> DataFrame:
-    df = base.read("08a_fingerprints_pos")
-    for e in range(1, epoch + 1):
-        df = df.unionByName(base.read(f"e{e}_fps_new"))
-    return df
-
-
-def _substring_state(base: StageStore, epoch: int) -> DataFrame:
-    df = base.read("08_substring_pairs")
-    for e in range(1, epoch + 1):
-        df = df.unionByName(base.read(f"e{e}_substring_new"))
-    return df
+    return all(
+        base.exists(stage if e == 0 else _delta_name(stage, e))
+        for stage in ("08a_fingerprints_pos", "08_substring_pairs")
+        for e in range(epoch + 1)
+    )
 
 
 def current_epoch(root: str) -> int:
@@ -265,6 +268,15 @@ def _base_tokens_digest(base: StageStore, epoch: int) -> str:
     return h.hexdigest()
 
 
+def _pair_ids(pairs: DataFrame) -> DataFrame:
+    """Distinct file_ids appearing on either side of (id_a, id_b) pairs."""
+    return (
+        pairs.select(F.col("id_a").alias("file_id"))
+        .unionByName(pairs.select(F.col("id_b").alias("file_id")))
+        .distinct()
+    )
+
+
 @dataclass
 class AppendResult:
     assignments: DataFrame   # file_id, content_sha, cluster_id — base ∪ batch
@@ -281,11 +293,8 @@ def append_batch(
     new_files: DataFrame,
     cfg: CascadeConfig,
     root: str,
-    use_kernel: bool = True,
 ) -> AppendResult:
     spark = new_files.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    heavy_par = max(4 * par, 16)
     _validate_chain_config(root, cfg, "append_batch")
     epoch = current_epoch(root)
     base = StageStore(spark, root)  # read-only view of the base stages
@@ -330,23 +339,14 @@ def append_batch(
     store = StageStore(spark, root, fingerprint=batch_fp)
     nxt = epoch + 1
 
-    src = new_files
-    src_parts = src.rdd.getNumPartitions()
-    if src_parts < par:
-        src = src.repartition(heavy_par)
-        src_parts = heavy_par
+    src, src_parts, heavy_par = balance_source(new_files)
 
     # hash the batch; drop files already in the corpus (same (repo, path,
     # commit) → same file_id) so re-appending a batch is a no-op
-    def _batch_files() -> DataFrame:
-        return (
-            add_content_hash(src, "content")
-            .withColumn("_nmd5", F.md5(normalize_code(F.col("content"))))
-            .select("file_id", "content_sha", "_nmd5")
-            .join(files_A.select("file_id"), "file_id", "left_anti")
-        )
-
-    files_B = store.run(f"e{nxt}_batch_files", _batch_files)
+    files_B = store.run(
+        _delta_name("00_input", nxt),
+        lambda: hash_input(src).join(files_A.select("file_id"), "file_id", "left_anti"),
+    )
     n_new = files_B.count()
     if n_new == 0:
         # nothing to fold in — current state is already the answer (the
@@ -357,116 +357,51 @@ def append_batch(
         return AppendResult(
             assignments, edges_A, edges_A.limit(0),
             0, n_batch_rows, epoch,
-            _substring_state(base, epoch)
+            _read_state(base, "08_substring_pairs", epoch)
             if _substring_enabled(base, epoch) else None,
         )
 
     # norm groups: sticky reps for existing groups, min batch id for new ones
-    def _new_groups() -> DataFrame:
-        b = files_B.groupBy("_nmd5").agg(F.min("file_id").alias("nrep_id"))
-        return b.join(groups_A.select("_nmd5"), "_nmd5", "left_anti")
+    new_groups = store.run(
+        _delta_name("01_norm_reps", nxt),
+        lambda: norm_groups(files_B).join(groups_A.select("_nmd5"), "_nmd5", "left_anti"),
+    )
 
-    new_groups = store.run(f"e{nxt}_new_groups", _new_groups)
+    # the entire per-row heavy path of the base pipeline, scoped to the
+    # batch's new representatives
+    prepared_new = store.run(
+        _delta_name("02_prepared", nxt),
+        lambda: prepare(representatives(src, src_parts, heavy_par, new_groups), cfg),
+    )
+    sigs_new = store.run(
+        _delta_name("03a_signatures", nxt), lambda: minhash_signatures(prepared_new, cfg)
+    )
+    short_new = store.run(
+        _delta_name("04a_simhash", nxt), lambda: short_simhash(prepared_new, cfg)
+    )
 
-    # normalize + shingle ONLY the new representatives (the entire per-row
-    # heavy path of the base pipeline, scoped to the batch)
-    def _prepared_new() -> DataFrame:
-        rows = src.select("file_id", "content").join(
-            new_groups.select(F.col("nrep_id").alias("file_id")), "file_id"
-        )
-        # mirror of pipeline._prepared's balance guard: skip the content
-        # shuffle when the batch scan is already split ≥ heavy_par ways
-        if src_parts < heavy_par:
-            rows = rows.repartition(heavy_par, "file_id")
-        rows = rows.withColumn("norm", normalize_code(F.col("content"))).select(
-            "file_id", "norm"
-        )
-        # same kernel as pipeline._prepared — append == from-scratch
-        # equality requires identical shingle hashing on both paths
-        from ..functions.kernels import char_shingle_hashes_kernel
-
-        sh = rows.withColumn(
-            "sh_hashes",
-            char_shingle_hashes_kernel(F.col("norm"), cfg.char_shingle_k),
-        )
-        return sh.withColumn(
-            "n_tokens", F.size(F.split(F.col("norm"), " "))
-        ).withColumn("n_shingles", F.size("sh_hashes")).select(
-            "file_id", "norm", "sh_hashes", "n_tokens", "n_shingles"
+    def _canonical(pairs: DataFrame) -> DataFrame:
+        # new×all meets each new rep itself, and a new×new pair arrives in
+        # both orientations; tag_candidates' groupBy dedups
+        return pairs.filter(F.col("id_a") != F.col("id_b")).select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
         )
 
-    prepared_new = store.run(f"e{nxt}_prepared_new", _prepared_new)
-
-    def _sigs_new() -> DataFrame:
-        if use_kernel:
-            from ..functions.kernels import apply_minhash
-
-            sig = apply_minhash(F.col("sh_hashes"), cfg)
-        else:
-            from ..functions.hashing import minhash_expr
-
-            sig = minhash_expr(F.col("sh_hashes"), cfg)
-        return prepared_new.withColumn("minhash", sig).select(
-            "file_id", "n_shingles", "minhash"
-        )
-
-    sigs_new = store.run(f"e{nxt}_signatures_new", _sigs_new)
-
-    def _short_new() -> DataFrame:
-        short = prepared_new.filter(F.col("n_tokens") <= cfg.short_doc_max_tokens)
-        short = short.withColumn("tokens", F.split(F.col("norm"), " "))
-        return add_simhash(short, "tokens", cfg, use_kernel=use_kernel).select(
-            "file_id", "simhash"
-        )
-
-    short_new = store.run(f"e{nxt}_short_new", _short_new)
-
-    # candidates touching a new rep, both blocking paths, verified in one
-    # pass exactly like pipeline._edges
+    # candidates touching a new rep, both blocking paths, verified in one pass
     def _new_edges() -> DataFrame:
-        sigs_all = sigs_A.unionByName(sigs_new)
-        # hash_bands mirrors the base pipeline (append completeness needs
-        # the same banding function a full run uses); dedup=False — the
-        # ordered() canonicalization below carries its own distinct
+        # hash_bands: append completeness needs the same banding function a
+        # full run uses; dedup=False — tag_candidates' groupBy dedups
         lsh = candidate_pairs_linkage(
-            sigs_new, sigs_all, "file_id", "minhash", cfg,
+            sigs_new, sigs_A.unionByName(sigs_new), "file_id", "minhash", cfg,
             cap_buckets=True, size_col="n_shingles",
             hash_bands=True, dedup=False,
-        ).filter(F.col("id_a") != F.col("id_b"))
-
-        short_all = short_A.unionByName(short_new)
-        chunks_of = lambda df, out: df.select(  # noqa: E731
-            F.col("file_id").alias(out[0]),
-            F.col("simhash").alias(out[1]),
-            F.posexplode(simhash_chunks(F.col("simhash"), cfg)).alias(
-                "chunk_idx", "chunk_val"
-            ),
         )
-        shp = (
-            chunks_of(short_new, ("id_a", "sim_a"))
-            .join(chunks_of(short_all, ("id_b", "sim_b")), ["chunk_idx", "chunk_val"])
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select(
-                "id_a", "id_b",
-                hamming60(F.col("sim_a"), F.col("sim_b")).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= cfg.simhash_max_hamming)
-            .select("id_a", "id_b")
+        shp = simhash_candidate_pairs_linkage(
+            short_new, short_A.unionByName(short_new), "file_id", "simhash", cfg
         )
-        # normalize pair order (a new×new pair arrives in both orientations)
-        def ordered(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-            ).distinct()
-
-        cand = (
-            ordered(lsh).withColumn("m_lsh", F.lit(1)).withColumn("m_short", F.lit(0))
-            .unionByName(
-                ordered(shp).withColumn("m_lsh", F.lit(0)).withColumn("m_short", F.lit(1))
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.max("m_lsh").alias("m_lsh"), F.max("m_short").alias("m_short"))
+        cand = tag_candidates(
+            _canonical(lsh), _canonical(shp)
         ).localCheckpoint(eager=True)  # consumed twice: id prefilter + verify
         feats = prepared_A.select("file_id", "sh_hashes").unionByName(
             prepared_new.select("file_id", "sh_hashes")
@@ -474,21 +409,10 @@ def append_batch(
         # semi-join prefilter: the verify join's pinned shuffle moves the
         # whole docs side, but an append only needs the features of ids in
         # candidate pairs — candidate-sized, not corpus-sized
-        ids = (
-            cand.select(F.col("id_a").alias("file_id"))
-            .unionByName(cand.select(F.col("id_b").alias("file_id")))
-            .distinct()
-        )
-        feats = feats.join(ids, "file_id", "left_semi")
-        scored = jaccard_verify(cand, feats, "file_id", "sh_hashes", cfg, keep_below=True)
-        lsh_ok = (F.col("m_lsh") == 1) & (F.col("jaccard") >= cfg.jaccard_threshold)
-        short_ok = (F.col("m_short") == 1) & (F.col("jaccard") >= SHORT_JACCARD)
-        return scored.filter(lsh_ok | short_ok).select(
-            "id_a", "id_b", "jaccard",
-            F.when(lsh_ok, F.lit("minhash_lsh")).otherwise(F.lit("simhash")).alias("method"),
-        )
+        feats = feats.join(_pair_ids(cand), "file_id", "left_semi")
+        return verify_edges(cand, feats, cfg)
 
-    new_edges = store.run(f"e{nxt}_new_edges", _new_edges)
+    new_edges = store.run(_delta_name("05_edges", nxt), _new_edges)
 
     # ---- delta promotion: the batch stages above ARE epoch n+1's deltas;
     # only the clustering — which must see the merged graph — is written
@@ -505,21 +429,16 @@ def append_batch(
     # base/delta stages already on disk
     substring_view = None
     if _substring_enabled(base, epoch):
-        # kernel pre-cap, mirroring pipeline's 08a — every fps table in a
-        # workdir (base + deltas) is pre-capped, so the linkage anchor pass
-        # skips its corpus-wide occurrence window
-        from ..operators.suffix import MAX_OCC_PER_DOC
-
+        # every fps table in a workdir (base + deltas) is pre-capped by
+        # positional_prints, so the linkage anchor pass skips its
+        # corpus-wide occurrence window
         fps_new = store.run(
-            f"e{nxt}_fps_new",
-            lambda: add_fingerprints_pos(
-                prepared_new.select("file_id", "norm"), "norm", cfg,
-                max_occ_per_doc=MAX_OCC_PER_DOC,
-            ).select("file_id", "fps_pos"),
+            _delta_name("08a_fingerprints_pos", nxt),
+            lambda: positional_prints(prepared_new, cfg),
         )
 
         def _substr_new() -> DataFrame:
-            fps_all = _fps_state(base, epoch).unionByName(fps_new)
+            fps_all = _read_state(base, "08a_fingerprints_pos", epoch).unionByName(fps_new)
             cand = fingerprint_anchor_pairs_linkage(
                 fps_all,
                 new_groups.select(F.col("nrep_id").alias("file_id")),
@@ -535,22 +454,19 @@ def append_batch(
             texts = prepared_A.select("file_id", "norm").unionByName(
                 prepared_new.select("file_id", "norm")
             )
-            # semi-join prefilter, mirroring _new_edges' feats prefilter:
-            # the verify join's pinned shuffle would otherwise move the
-            # corpus-sized norm-text table every append — it only needs
-            # the texts of ids that appear in a candidate pair
-            ids = (
-                fresh.select(F.col("id_a").alias("file_id"))
-                .unionByName(fresh.select(F.col("id_b").alias("file_id")))
-                .distinct()
-            )
-            texts = texts.join(ids, "file_id", "left_semi")
+            # semi-join prefilter, as for the verify features: the verify
+            # join's pinned shuffle would otherwise move the corpus-sized
+            # norm-text table every append — it only needs the texts of
+            # ids that appear in a candidate pair
+            texts = texts.join(_pair_ids(fresh), "file_id", "left_semi")
             return verify_long_substring_anchored(
                 fresh, texts, "file_id", "norm", cfg
             )
 
-        substr_new = store.run(f"e{nxt}_substring_new", _substr_new)
-        substring_view = _substring_state(base, epoch).unionByName(substr_new)
+        substr_new = store.run(_delta_name("08_substring_pairs", nxt), _substr_new)
+        substring_view = _read_state(base, "08_substring_pairs", epoch).unionByName(
+            substr_new
+        )
 
     def _clusters() -> DataFrame:
         """Incremental connected components: a component's membership can
@@ -561,7 +477,7 @@ def append_batch(
         already carry their min-member label, affected ones get it from
         the fresh CC — so the result equals CC over the full merged graph
         at subgraph cost."""
-        old_cl = base.read("06_clusters" if epoch == 0 else f"e{epoch}_clusters")
+        old_cl = base.read(cl_stage)
         seed = (
             new_edges.select(F.col("id_a").alias("id"))
             .unionByName(new_edges.select(F.col("id_b").alias("id")))
@@ -657,11 +573,14 @@ def compact(
         lambda: base.read(as_stage).select("file_id", "content_sha", "cluster_id"),
     )
     if _substring_enabled(base, epoch):
-        fps_all = dst.run("08a_fingerprints_pos", lambda: _fps_state(base, epoch))
+        fps_all = dst.run(
+            "08a_fingerprints_pos",
+            lambda: _read_state(base, "08a_fingerprints_pos", epoch),
+        )
         dst.run(
             "08_substring_pairs",
             lambda: _recompacted_substring_pairs(
-                _substring_state(base, epoch),
+                _read_state(base, "08_substring_pairs", epoch),
                 fps_all,
                 _read_state(base, "02_prepared", epoch, cols=["file_id", "norm"]),
                 cfg,
@@ -711,11 +630,6 @@ def _recompacted_substring_pairs(
     freq = fpsx.groupBy("fp").agg(F.countDistinct("_id").alias("_df"))
     over = freq.filter(F.col("_df") > cfg.max_bucket_size).select("fp")
 
-    pair_ids = (
-        pairs.select(F.col("id_a").alias("_id"))
-        .unionByName(pairs.select(F.col("id_b").alias("_id")))
-        .distinct()
-    )
     # suspect pairs: share >= 1 now-over-threshold print.  Driven from the
     # PAIRS side (round-5 ADVICE): join pairs → prints of id_a, semi-join
     # on (id_b, fp) — intermediates stay bounded by |pairs| × prints-per-
@@ -723,7 +637,7 @@ def _recompacted_substring_pairs(
     # boilerplate print shared by k pair-member docs, exactly on the
     # boilerplate-heavy corpora where prints go over threshold.
     over_fps = (
-        fpsx.join(pair_ids, "_id", "left_semi")
+        fpsx.join(_pair_ids(pairs).withColumnRenamed("file_id", "_id"), "_id", "left_semi")
         .join(over, "fp", "left_semi")
         .select("_id", "fp")
         .distinct()
@@ -750,11 +664,7 @@ def _recompacted_substring_pairs(
     # per-document property, so restricting to suspect ids BEFORE the
     # window (round-5 ADVICE) gives the identical result at suspect-
     # bounded cost — no corpus-wide window sort per compaction.
-    sus_ids = (
-        sus.select(F.col("id_a").alias("_id"))
-        .unionByName(sus.select(F.col("id_b").alias("_id")))
-        .distinct()
-    )
+    sus_ids = _pair_ids(sus).withColumnRenamed("file_id", "_id")
     w = Window.partitionBy("_id", "fp").orderBy("pos")
     sus_fps = (
         fpsx.join(sus_ids, "_id", "left_semi")
@@ -772,8 +682,7 @@ def _recompacted_substring_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.collect_list(F.struct("pos_a", "pos_b")).alias("anchors"))
     )
-    sus_texts = texts.join(sus_ids.withColumnRenamed("_id", "file_id"),
-                           "file_id", "left_semi")
+    sus_texts = texts.join(_pair_ids(sus), "file_id", "left_semi")
     reverified = verify_long_substring_anchored(
         anchors, sus_texts, "file_id", "norm", cfg
     )

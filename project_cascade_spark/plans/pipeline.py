@@ -20,23 +20,28 @@ code_files(repo, path, commit, lang, content):
                           per-pair suffix array — NOT merged into clusters
 
 Every stage can be checkpointed through a StageStore (resume semantics);
-pass store=None for a single fused run (small scale / benchmarks).
+pass store=None for a single fused run (small scale / benchmarks).  Stage
+bodies are module-level frame → frame functions, shared with
+plans/append.py (over a batch's delta) and link_tables (prepare).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CascadeConfig
+from ..functions.kernels import apply_minhash, char_shingle_hashes_kernel
 from ..functions.text import normalize_code
 from ..operators.connected_components import connected_components
 from ..operators.dedup import add_content_hash
-from ..operators.minhash_lsh import add_minhash, candidate_pairs
+from ..operators.minhash_lsh import candidate_pairs, candidate_pairs_linkage
 from ..operators.simhash import add_simhash, simhash_candidate_pairs
 from ..operators.suffix import (
+    MAX_OCC_PER_DOC,
     add_fingerprints_pos,
     fingerprint_anchor_pairs,
     verify_long_substring_anchored,
@@ -45,6 +50,183 @@ from ..operators.verify import jaccard_verify
 from ..sources.sinks import StageStore
 
 SHORT_JACCARD = 0.5  # relaxed verify for SimHash path (hamming is primary)
+
+
+def balance_source(code_files: DataFrame) -> tuple[DataFrame, int, int]:
+    """(src, src_parts, heavy_par): the input spread across cores before
+    any per-row work.
+
+    A single parquet file (or a pandas-sourced frame) arrives as 1
+    partition and would serialize sha256 + normalization.  Heavy per-row
+    stages get 4x cores (heavy_par): with partitions == cores one
+    straggler extends the whole stage — profiled at 30k files as flat
+    1.2-1.8x stage ratios between local[2] and local[8]; 4x granularity
+    restores load balance.
+
+    The input is repartitioned only when the scan itself is UNDER-parallel
+    (fewer splits than cores): a well-sharded source already spreads the
+    per-row hashing, and skipping the repartition avoids shuffling the
+    full content bytes once."""
+    par = code_files.sparkSession.sparkContext.defaultParallelism
+    heavy_par = max(4 * par, 16)
+    src = code_files
+    src_parts = src.rdd.getNumPartitions()
+    if src_parts < par:
+        src = src.repartition(heavy_par)
+        src_parts = heavy_par
+    return src, src_parts, heavy_par
+
+
+def hash_input(src: DataFrame) -> DataFrame:
+    """00_input: the hash-only working set (file_id, content_sha, _nmd5).
+
+    norm + md5(norm) are computed HERE, in the one stage that is already
+    per-row-parallel, rather than in a post-groupBy stage: the old
+    normalize-after-exact-dedup layout shuffled ~full content strings and
+    ran the regexes in a flat ~4s stage that cost the same at local[2]
+    and local[8] (profiled); every dedup groupBy downstream now shuffles
+    only (file_id, hash) columns.
+
+    At ~48 B/row, content and even the normalized text stay out of every
+    checkpoint and shuffle (norm is recomputed from the source scan for
+    the deduped representatives inside `prepare`, and content re-joins
+    from the source at assignment time).  At 10^12 rows this is the
+    difference between checkpointing terabytes of text and checkpointing
+    gigabytes of hashes."""
+    return (
+        add_content_hash(src, "content")
+        .withColumn("_nmd5", F.md5(normalize_code(F.col("content"))))
+        .select("file_id", "content_sha", "_nmd5")
+    )
+
+
+def norm_groups(files: DataFrame) -> DataFrame:
+    """01_norm_reps: (_nmd5, nrep_id) — exact dedup, both levels in ONE tiny
+    groupBy.  Identical content has identical normalization, so grouping by
+    md5(norm) subsumes the sha256 level (the reference's
+    clean-then-drop_duplicates move, data_matching.py:197).  The group rep
+    is the global min file_id, exactly what a two-level chain resolves to.
+    This is also the LSH skew guard: boilerplate dup groups collapse to
+    one representative before any band is built."""
+    return files.groupBy("_nmd5").agg(F.min("file_id").alias("nrep_id"))
+
+
+def representatives(
+    src: DataFrame, src_parts: int, heavy_par: int, groups: DataFrame
+) -> DataFrame:
+    """(file_id, content) of each group's rep: source scan ⋈ rep ids (the
+    id side is tiny — AQE broadcasts it, so content moves at most once, in
+    the balance repartition below).
+
+    Balance guard: downstream per-row stages (normalization regexes,
+    shingle hashing, minhash kernel, winnowing) need partitions ∝ cores
+    regardless of byte size — an AQE-coalesced 1-2-partition frame was
+    measured as 3 × ~50s serialized stages at 8k files.  When the SOURCE
+    is already split ≥ heavy_par ways, the rep-id join is a broadcast (ids
+    are tiny) that PRESERVES the scan's partitioning, so the explicit
+    repartition would be a pure extra shuffle of the full content bytes —
+    skip it (guide §2.4).  An under-split source still pays the one
+    balancing shuffle."""
+    base = src.select("file_id", "content").join(
+        groups.select(F.col("nrep_id").alias("file_id")), "file_id"
+    )
+    if src_parts < heavy_par:
+        base = base.repartition(heavy_par, "file_id")
+    return base
+
+
+def prepare(rows: DataFrame, cfg: CascadeConfig) -> DataFrame:
+    """02_prepared: (file_id, content) → (file_id, norm, sh_hashes,
+    n_tokens, n_shingles).
+
+    verify runs on HASHED shingles — set semantics (distinct) and 31-bit
+    values preserved (collisions shift Jaccard by <1e-3).  Hashing runs in
+    the batched rolling-hash kernel: the old JVM chain (char_shingles →
+    xxhash64 per shingle) allocated one k-char substring + one hash call
+    per character and was the dominant per-row stage; the kernel computes
+    every window hash of an Arrow batch in a few vectorized numpy passes
+    (kernels.make_char_shingle_hash_udf).  Values live in [0, 2^31):
+    stored as array<int>, which HALVES the bytes of the hottest table —
+    the prepared checkpoint and both verify-join shuffles are
+    shingle-array-dominated.  The minhash kernel upcasts to int64 on
+    entry."""
+    base = rows.withColumn("norm", normalize_code(F.col("content"))).select(
+        "file_id", "norm"
+    )
+    sh = base.withColumn(
+        "sh_hashes",
+        char_shingle_hashes_kernel(F.col("norm"), cfg.char_shingle_k),
+    )
+    sh = sh.withColumn("n_tokens", F.size(F.split(F.col("norm"), " "))).withColumn(
+        "n_shingles", F.size("sh_hashes")
+    )
+    return sh.select("file_id", "norm", "sh_hashes", "n_tokens", "n_shingles")
+
+
+def minhash_signatures(prepared: DataFrame, cfg: CascadeConfig) -> DataFrame:
+    """03a_signatures: (file_id, n_shingles, minhash) — n_shingles rides
+    along for the LSH size-ratio prefilter."""
+    return prepared.withColumn(
+        "minhash", apply_minhash(F.col("sh_hashes"), cfg)
+    ).select("file_id", "n_shingles", "minhash")
+
+
+def short_simhash(prepared: DataFrame, cfg: CascadeConfig) -> DataFrame:
+    """04a_simhash: (file_id, simhash) of the short files only — the
+    SimHash path covers what MinHash blocks poorly (few shingles)."""
+    short = prepared.filter(F.col("n_tokens") <= cfg.short_doc_max_tokens)
+    short = short.withColumn("tokens", F.split(F.col("norm"), " "))
+    return add_simhash(short, "tokens", cfg).select("file_id", "simhash")
+
+
+def positional_prints(prepared: DataFrame, cfg: CascadeConfig) -> DataFrame:
+    """08a_fingerprints_pos: (file_id, fps_pos).  The occurrence cap is
+    pre-applied in the winnow kernel (row-local, same earliest-positions
+    semantics), so every anchor-pair pass over these prints skips its
+    corpus-wide row_number window — one shuffle+sort of the exploded print
+    table removed (guide §2.4)."""
+    return add_fingerprints_pos(
+        prepared.select("file_id", "norm"), "norm", cfg,
+        max_occ_per_doc=MAX_OCC_PER_DOC,
+    ).select("file_id", "fps_pos")
+
+
+def tag_candidates(lsh_pairs: DataFrame, short_pairs: DataFrame) -> DataFrame:
+    """(id_a, id_b, m_lsh, m_short): both blocking paths' candidates, one
+    row per pair, flagged with the paths that found it.
+
+    ONE verify pass for both blocking paths (round 3): verifying LSH and
+    SimHash candidates separately cost four id-joins against `prepared`
+    plus a post-union groupBy, all flat fixed-latency shuffle stages at
+    bench scale.  Tagging candidates with their method first and verifying
+    the union once halves the verify joins and drops the final groupBy
+    (pairs are unique after the flag aggregation, so callers need not
+    dedup their pairs first)."""
+    return (
+        lsh_pairs.withColumn("m_lsh", F.lit(1)).withColumn("m_short", F.lit(0))
+        .unionByName(
+            short_pairs.withColumn("m_lsh", F.lit(0)).withColumn("m_short", F.lit(1))
+        )
+        .groupBy("id_a", "id_b")
+        .agg(F.max("m_lsh").alias("m_lsh"), F.max("m_short").alias("m_short"))
+    )
+
+
+def verify_edges(cand: DataFrame, docs: DataFrame, cfg: CascadeConfig) -> DataFrame:
+    """05_edges: (id_a, id_b, jaccard, method) for tagged candidates whose
+    method's threshold passes, with `docs` supplying (file_id, sh_hashes).
+    A pair found by both paths reports 'minhash_lsh' exactly when
+    min(method) over separately verified paths would (it survives the
+    stricter τ there iff lsh_ok here)."""
+    scored = jaccard_verify(cand, docs, "file_id", "sh_hashes", cfg, keep_below=True)
+    lsh_ok = (F.col("m_lsh") == 1) & (F.col("jaccard") >= cfg.jaccard_threshold)
+    short_ok = (F.col("m_short") == 1) & (F.col("jaccard") >= SHORT_JACCARD)
+    return scored.filter(lsh_ok | short_ok).select(
+        "id_a",
+        "id_b",
+        "jaccard",
+        F.when(lsh_ok, F.lit("minhash_lsh")).otherwise(F.lit("simhash")).alias("method"),
+    )
 
 
 @dataclass
@@ -60,7 +242,6 @@ def dedup_pipeline(
     cfg: CascadeConfig,
     store: StageStore | None = None,
     with_substring_pass: bool = True,
-    use_kernel: bool = True,
     stage_times: dict | None = None,
 ) -> PipelineResult:
     # With a store, every stage is durable parquet (resume semantics).
@@ -87,38 +268,7 @@ def dedup_pipeline(
             stage_times[stage] = stage_times.get(stage, 0.0) + _time.time() - t0
             return out
 
-    # spread the input across cores before any per-row work: a single
-    # parquet file (or a pandas-sourced frame) arrives as 1 partition and
-    # would serialize sha256 + normalization.  Heavy per-row stages get
-    # 4x cores (heavy_par): with partitions == cores one straggler extends
-    # the whole stage — profiled at 30k files as flat 1.2-1.8x stage ratios
-    # between local[2] and local[8]; 4x granularity restores load balance.
-    #
-    # norm + md5(norm) are computed HERE, in the one stage that is already
-    # per-row-parallel, rather than in a post-groupBy stage: the old
-    # normalize-after-exact-dedup layout shuffled ~full content strings and
-    # ran the regexes in a flat ~4s stage that cost the same at local[2]
-    # and local[8] (profiled); every dedup groupBy downstream now shuffles
-    # only (file_id, hash) columns.
-    par = code_files.sparkSession.sparkContext.defaultParallelism
-    heavy_par = max(4 * par, 16)
-    # The durable working set is HASHES ONLY — (file_id, content_sha,
-    # _nmd5) at ~48 B/row: content and even the normalized text stay out of
-    # every checkpoint and shuffle (norm is recomputed from the source scan
-    # for the deduped representatives inside the parallel prepared stage,
-    # and content re-joins from the source at assignment time).  At 10^12
-    # rows this is the difference between checkpointing terabytes of text
-    # and checkpointing gigabytes of hashes.
-    #
-    # The input is repartitioned only when the scan itself is UNDER-parallel
-    # (fewer splits than cores): a well-sharded source already spreads the
-    # per-row hashing, and skipping the repartition avoids shuffling the
-    # full content bytes once.
-    src = code_files
-    src_parts = src.rdd.getNumPartitions()
-    if src_parts < par:
-        src = src.repartition(heavy_par)
-        src_parts = heavy_par
+    src, src_parts, heavy_par = balance_source(code_files)
     # Kept EAGER deliberately (measured, round 3): a lazy 00_input fuses
     # into its two consumers and re-runs the content scan + sha/md5 pass
     # twice; the scan is bounded by the source's split count, not by
@@ -126,71 +276,14 @@ def dedup_pipeline(
     # The checkpoint itself is ~48 B/row — cheap.  What makes this stage
     # scale is a well-split source (many parquet parts / row groups), not
     # laziness.
-    files = run(
-        "00_input",
-        lambda: add_content_hash(src, "content")
-        .withColumn("_nmd5", F.md5(normalize_code(F.col("content"))))
-        .select("file_id", "content_sha", "_nmd5"),
+    files = run("00_input", lambda: hash_input(src))
+    # The content_sha column still rides on every row of `files` — the
+    # per-row invariant stays testable.
+    norm_reps_df = run("01_norm_reps", lambda: norm_groups(files))
+    prepared = run(
+        "02_prepared",
+        lambda: prepare(representatives(src, src_parts, heavy_par, norm_reps_df), cfg),
     )
-
-    # Exact dedup, both levels in ONE tiny groupBy: identical content has
-    # identical normalization, so grouping by md5(norm) subsumes the sha256
-    # level (the reference's clean-then-drop_duplicates move,
-    # data_matching.py:197).  The content_sha column still rides on every
-    # row — the per-row invariant stays testable — and the group rep is the
-    # global min file_id, exactly what the old two-level chain resolved to.
-    # This is also the LSH skew guard: boilerplate dup groups collapse to
-    # one representative before any band is built.
-    norm_reps_df = run(
-        "01_norm_reps",
-        lambda: files.groupBy("_nmd5").agg(F.min("file_id").alias("nrep_id")),
-    )
-
-    def _prepared() -> DataFrame:
-        # representatives only: source scan ⋈ rep ids (the id side is tiny —
-        # AQE broadcasts it, so content moves at most once, in the balance
-        # repartition below), then normalization runs on the deduped set.
-        base = src.select("file_id", "content").join(
-            norm_reps_df.select(F.col("nrep_id").alias("file_id")), "file_id"
-        )
-        # Balance guard: downstream per-row stages (normalization regexes,
-        # shingle hashing, minhash kernel, winnowing) need partitions ∝
-        # cores regardless of byte size — an AQE-coalesced 1-2-partition
-        # frame was measured as 3 × ~50s serialized stages at 8k files.
-        # When the SOURCE is already split ≥ heavy_par ways, the rep-id
-        # join is a broadcast (ids are tiny) that PRESERVES the scan's
-        # partitioning, so the explicit repartition would be a pure extra
-        # shuffle of the full content bytes — skip it (guide §2.4).  An
-        # under-split source still pays the one balancing shuffle.
-        if src_parts < heavy_par:
-            base = base.repartition(heavy_par, "file_id")
-        base = base.withColumn("norm", normalize_code(F.col("content"))).select(
-            "file_id", "norm"
-        )
-        # verify runs on HASHED shingles — set semantics (distinct) and
-        # 31-bit values preserved (collisions shift Jaccard by <1e-3).
-        # Hashing runs in the batched rolling-hash kernel: the old JVM
-        # chain (char_shingles → xxhash64 per shingle) allocated one
-        # k-char substring + one hash call per character and was the
-        # dominant per-row stage; the kernel computes every window hash of
-        # an Arrow batch in a few vectorized numpy passes
-        # (kernels.make_char_shingle_hash_udf).  Values live in [0, 2^31):
-        # stored as array<int>, which HALVES the bytes of the hottest
-        # table — the prepared checkpoint and both verify-join shuffles
-        # are shingle-array-dominated.  The minhash kernel upcasts to
-        # int64 on entry.
-        from ..functions.kernels import char_shingle_hashes_kernel
-
-        sh = base.withColumn(
-            "sh_hashes",
-            char_shingle_hashes_kernel(F.col("norm"), cfg.char_shingle_k),
-        )
-        sh = sh.withColumn("n_tokens", F.size(F.split(F.col("norm"), " "))).withColumn(
-            "n_shingles", F.size("sh_hashes")
-        )
-        return sh.select("file_id", "norm", "sh_hashes", "n_tokens", "n_shingles")
-
-    prepared = run("02_prepared", _prepared)
 
     # --- independent post-prepared stages (signatures, short-doc simhash,
     # positional prints) share no dependencies: in the fused no-store run
@@ -199,63 +292,25 @@ def dedup_pipeline(
     # three flat stage latencies back to back.  With a store the chain
     # stays sequential — StageStore's resume token is an ORDERED sha256
     # chain of upstream stage names, so parallel run() calls would race it.
+    #
+    # Signatures and prints are persisted: candidate_pairs self-joins the
+    # band table (and fingerprint_anchor_pairs the print table), so an
+    # unpersisted column would run its kernel TWICE (once per join side) —
+    # measured as the dominant stage at 30k files.
     overlap = store is None
-
-    def _signatures() -> DataFrame:
-        # persisted: candidate_pairs self-joins the band table, so an
-        # unpersisted signature column would run the minhash kernel TWICE
-        # (once per join side) — measured as the dominant stage at 30k files
-        if use_kernel:
-            from ..functions.kernels import apply_minhash
-
-            sig = apply_minhash(F.col("sh_hashes"), cfg)
-        else:
-            from ..functions.hashing import minhash_expr
-
-            sig = minhash_expr(F.col("sh_hashes"), cfg)
-        return prepared.withColumn("minhash", sig).select(
-            "file_id", "n_shingles", "minhash"
-        )
-
-    def _short_sim() -> DataFrame:
-        short = prepared.filter(F.col("n_tokens") <= cfg.short_doc_max_tokens)
-        short = short.withColumn("tokens", F.split(F.col("norm"), " "))
-        return add_simhash(short, "tokens", cfg, use_kernel=use_kernel).select(
-            "file_id", "simhash"
-        )
-
-    from ..operators.suffix import MAX_OCC_PER_DOC
-
-    def _fps() -> DataFrame:
-        # occurrence cap pre-applied in the winnow kernel (row-local, same
-        # earliest-positions semantics) so the anchor-pair stage skips its
-        # corpus-wide row_number window — one shuffle+sort of the exploded
-        # print table removed (guide §2.4)
-        return add_fingerprints_pos(
-            prepared.select("file_id", "norm"), "norm", cfg,
-            max_occ_per_doc=MAX_OCC_PER_DOC,
-        ).select("file_id", "fps_pos")
-
-    fps = None
+    post_prepared = [
+        ("03a_signatures", minhash_signatures),
+        ("04a_simhash", short_simhash),
+    ] + ([("08a_fingerprints_pos", positional_prints)] if with_substring_pass else [])
+    fns = [(name, lambda f=f: f(prepared, cfg)) for name, f in post_prepared]
     if overlap:
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=3) as pool:
-            f_sig = pool.submit(run, "03a_signatures", _signatures)
-            f_short = pool.submit(run, "04a_simhash", _short_sim)
-            f_fps = (
-                pool.submit(run, "08a_fingerprints_pos", _fps)
-                if with_substring_pass else None
-            )
-            signatures = f_sig.result()
-            short_sim = f_short.result()
-            if f_fps is not None:
-                fps = f_fps.result()
+            futures = [pool.submit(run, name, fn) for name, fn in fns]
+            outs = [f.result() for f in futures]
     else:
-        signatures = run("03a_signatures", _signatures)
-        short_sim = run("04a_simhash", _short_sim)
-        if with_substring_pass:
-            fps = run("08a_fingerprints_pos", _fps)
+        outs = [run(name, fn) for name, fn in fns]
+    signatures, short_sim = outs[:2]
+    fps = outs[2] if with_substring_pass else None
 
     # hash_bands: int64 band keys (the band table is the widest shuffle of
     # the blocking stage; the oracle-parity string keys stay on the doc
@@ -283,35 +338,7 @@ def dedup_pipeline(
     )
 
     def _edges() -> DataFrame:
-        # ONE verify pass for both blocking paths (round 3): the old layout
-        # verified LSH and SimHash candidates separately — four id-joins
-        # against `prepared` plus a post-union groupBy, all flat
-        # fixed-latency shuffle stages at bench scale.  Tagging candidates
-        # with their method first and verifying the union once halves the
-        # verify joins and drops the final groupBy (pairs are unique after
-        # the flag aggregation).  Semantics are identical: a pair keeps an
-        # edge iff its method's threshold passes, and a pair found by both
-        # paths reports 'minhash_lsh' exactly when the old min(method)
-        # would have (it survives the stricter τ there iff lsh_ok here).
-        cand = (
-            lsh_pairs.withColumn("m_lsh", F.lit(1)).withColumn("m_short", F.lit(0))
-            .unionByName(
-                short_pairs.withColumn("m_lsh", F.lit(0)).withColumn("m_short", F.lit(1))
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.max("m_lsh").alias("m_lsh"), F.max("m_short").alias("m_short"))
-        )
-        scored = jaccard_verify(
-            cand, prepared, "file_id", "sh_hashes", cfg, keep_below=True
-        )
-        lsh_ok = (F.col("m_lsh") == 1) & (F.col("jaccard") >= cfg.jaccard_threshold)
-        short_ok = (F.col("m_short") == 1) & (F.col("jaccard") >= SHORT_JACCARD)
-        return scored.filter(lsh_ok | short_ok).select(
-            "id_a",
-            "id_b",
-            "jaccard",
-            F.when(lsh_ok, F.lit("minhash_lsh")).otherwise(F.lit("simhash")).alias("method"),
-        )
+        return verify_edges(tag_candidates(lsh_pairs, short_pairs), prepared, cfg)
 
     def _anchor_cand() -> DataFrame:
         return fingerprint_anchor_pairs(
@@ -331,9 +358,7 @@ def dedup_pipeline(
         # against a ~26 s edges wall).  The StageStore path keeps the
         # sequential lazy shape — its durable stage chain is ORDERED and
         # 08's token must stay derived from the same chain as before.
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as pool2:
+        with ThreadPoolExecutor(max_workers=2) as pool2:
             f_edges = pool2.submit(run, "05_edges", _edges)
             f_cand = pool2.submit(run, "08b_anchor_cands", _anchor_cand)
             edges = f_edges.result()
@@ -341,10 +366,9 @@ def dedup_pipeline(
     else:
         edges = run("05_edges", _edges)
 
-    def _clusters() -> DataFrame:
-        return connected_components(edges, "id_a", "id_b")
-
-    rep_clusters = run("06_clusters", _clusters, persist=False)
+    rep_clusters = run(
+        "06_clusters", lambda: connected_components(edges, "id_a", "id_b"), persist=False
+    )
 
     def _assign_core() -> DataFrame:
         # cluster(file) = file → norm-rep (_nmd5 groupBy) → component.
@@ -380,10 +404,8 @@ def dedup_pipeline(
     substring_pairs = None
     if with_substring_pass:
 
-        # fps was computed up with the other post-prepared stages
-        # (persisted for the same self-join reason as the signatures; the
-        # anchored-extension design notes live on add_fingerprints_pos /
-        # verify_long_substring_anchored).  In the fused run the candidate
+        # the anchored-extension design notes live on add_fingerprints_pos /
+        # verify_long_substring_anchored.  In the fused run the candidate
         # table was already materialized concurrently with 05_edges above.
         def _substr() -> DataFrame:
             cand = anchor_cand if anchor_cand is not None else _anchor_cand()
@@ -401,7 +423,6 @@ def link_tables(
     source: DataFrame,
     registry: DataFrame,
     cfg: CascadeConfig,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Two-table linkage: match SOURCE files against a canonical REGISTRY —
     the reference's primary csvlink entry (data_matching.py:146-198,
@@ -409,35 +430,21 @@ def link_tables(
     case.  Output: (source_id, registry_id, jaccard), one row per verified
     cross-table match.
 
-    Same scale shape as the self-dedup pipeline: per-side normalize +
-    shingle + minhash in one per-row-parallel stage, cross-table band
-    collisions only (candidate_pairs_linkage — salted caps apply per
-    side), verify via the pinned shuffled Jaccard joins with each side
-    resolving features against its OWN table (id spaces may overlap).
+    Same scale shape as the self-dedup pipeline: per-side `prepare` +
+    minhash in one per-row-parallel stage, cross-table band collisions
+    only (candidate_pairs_linkage — salted caps apply per side), verify
+    via the pinned shuffled Jaccard joins with each side resolving
+    features against its OWN table (id spaces may overlap).
     """
-    from ..functions.kernels import char_shingle_hashes_kernel
-    from ..operators.minhash_lsh import candidate_pairs_linkage
 
     def prep(df: DataFrame) -> DataFrame:
         par = df.sparkSession.sparkContext.defaultParallelism
-        base = df.select("file_id", "content").repartition(
+        rows = df.select("file_id", "content").repartition(
             max(4 * par, 16), "file_id"
         )
-        base = base.withColumn("norm", normalize_code(F.col("content")))
-        sh = base.withColumn(
-            "sh_hashes",
-            char_shingle_hashes_kernel(F.col("norm"), cfg.char_shingle_k),
-        ).withColumn("n_shingles", F.size("sh_hashes"))
-        if use_kernel:
-            from ..functions.kernels import apply_minhash
-
-            sig = apply_minhash(F.col("sh_hashes"), cfg)
-        else:
-            from ..functions.hashing import minhash_expr
-
-            sig = minhash_expr(F.col("sh_hashes"), cfg)
-        return sh.select("file_id", "sh_hashes", "n_shingles").withColumn(
-            "minhash", sig
+        sh = prepare(rows, cfg).select("file_id", "sh_hashes", "n_shingles")
+        return sh.withColumn(
+            "minhash", apply_minhash(F.col("sh_hashes"), cfg)
         ).localCheckpoint(eager=True)
 
     src_p, reg_p = prep(source), prep(registry)

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import os
 import re
+import traceback
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -72,7 +74,17 @@ def build_session(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if os.environ.get("CASCADE_WARM_WORKERS", "1") != "0":
-        _warm_python_workers(spark)
+        # the warm-up only moves first-use costs out of measured walls; a
+        # failure in it degrades to a cold start, never to a failed session
+        try:
+            _warm_python_workers(spark)
+        except Exception as e:  # noqa: BLE001
+            warnings.warn(
+                f"session warm-up failed, continuing cold: {e!r}\n"
+                f"{traceback.format_exc()}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return spark
 
 

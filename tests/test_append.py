@@ -181,8 +181,10 @@ def test_append_substring_pass_matches_full_run(spark, tmp_path):
             .sort_values(["id_a", "id_b"]).reset_index(drop=True)
         )
 
+    full_store = StageStore(spark, str(tmp_path / "full"), fingerprint="a-and-b")
     full_res = dedup_pipeline(
-        load_code_files(spark, pdf), CODE_CONFIG, with_substring_pass=True
+        load_code_files(spark, pdf), CODE_CONFIG, store=full_store,
+        with_substring_pass=True,
     )
     full_sub = _sub_pdf(full_res.substring_pairs)
 
@@ -201,6 +203,22 @@ def test_append_substring_pass_matches_full_run(spark, tmp_path):
 
     # assignments stay label-exact with the pass enabled too
     assert _assign_pdf(res.assignments).equals(_assign_pdf(full_res.assignments))
+
+    # every per-row delta stage holds exactly the from-scratch stage's rows
+    # for the batch's new reps (batch-only norm groups have the same rep on
+    # both sides, so the equality is exact)
+    inc_store = StageStore(spark, wd)
+    for delta, stage in [
+        ("e1_prepared_new", "02_prepared"),
+        ("e1_signatures_new", "03a_signatures"),
+        ("e1_short_new", "04a_simhash"),
+        ("e1_fps_new", "08a_fingerprints_pos"),
+    ]:
+        got = inc_store.read(delta)
+        want = full_store.read(stage).join(got.select("file_id"), "file_id", "left_semi")
+        assert got.count() == want.count() > 0, delta
+        assert got.exceptAll(want).count() == 0, delta
+        assert want.exceptAll(got).count() == 0, delta
 
 
 def test_compact_recomputes_template_filter(spark, tmp_path):

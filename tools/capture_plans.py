@@ -1,6 +1,7 @@
-"""Capture .explain('formatted') output for the queries/stages touched in
-the optimization round.  Run with PYTHONPATH at the tree to capture (the
-round-start worktree for *_before.txt, the current tree for *_after.txt).
+"""Capture .explain('formatted') output for the headline doc queries and the
+pipeline's hot stages.  Run from the root of the checkout to capture; the
+suffix tags the files (e.g. before/after a change, each from its own
+checkout).
 
 Usage: python tools/capture_plans.py <outdir> <suffix>
   e.g. python tools/capture_plans.py plans/r06 after
@@ -22,8 +23,6 @@ def explain_str(df) -> str:
 def main() -> None:
     outdir, suffix = sys.argv[1], sys.argv[2]
     os.makedirs(outdir, exist_ok=True)
-
-    from pyspark.sql import functions as F
 
     from project_cascade_spark.config import CODE_CONFIG
     from project_cascade_spark.datagen import generate_code_files
@@ -56,95 +55,44 @@ def main() -> None:
     dump("pipeline_substring_pairs", res.substring_pairs)
 
     # un-truncated views of the hot stages (prepared -> signatures ->
-    # candidates -> verified edges), built from the same operators the
-    # pipeline composes
-    from project_cascade_spark.functions.text import normalize_code
-    from project_cascade_spark.operators.dedup import add_content_hash
-    from project_cascade_spark.operators.verify import jaccard_verify
+    # candidates -> verified edges, and the anchor pairs), built from the
+    # pipeline's own stage functions without its checkpoints
+    from project_cascade_spark.operators.minhash_lsh import candidate_pairs
+    from project_cascade_spark.operators.simhash import simhash_candidate_pairs
+    from project_cascade_spark.operators.suffix import fingerprint_anchor_pairs
+    from project_cascade_spark.plans.pipeline import (
+        balance_source,
+        hash_input,
+        minhash_signatures,
+        norm_groups,
+        positional_prints,
+        prepare,
+        representatives,
+        short_simhash,
+        tag_candidates,
+        verify_edges,
+    )
 
     cfg = CODE_CONFIG
-    src = df
-    files = (
-        add_content_hash(src, "content")
-        .withColumn("_nmd5", F.md5(normalize_code(F.col("content"))))
-        .select("file_id", "content_sha", "_nmd5")
-    )
-    norm_reps = files.groupBy("_nmd5").agg(F.min("file_id").alias("nrep_id"))
-    base = src.select("file_id", "content").join(
-        norm_reps.select(F.col("nrep_id").alias("file_id")), "file_id"
-    )
-    base = base.withColumn("norm", normalize_code(F.col("content"))).select(
-        "file_id", "norm"
-    )
-    try:  # current tree
-        from project_cascade_spark.functions.kernels import (
-            char_shingle_hashes_kernel,
-        )
-
-        sh = base.withColumn(
-            "sh_hashes",
-            char_shingle_hashes_kernel(F.col("norm"), cfg.char_shingle_k),
-        )
-    except ImportError:  # round-start tree
-        from project_cascade_spark.functions.hashing import fast_shingle_hashes
-        from project_cascade_spark.functions.text import char_shingles
-
-        sh = base.withColumn(
-            "shingles", char_shingles(F.col("norm"), cfg.char_shingle_k)
-        ).withColumn(
-            "sh_hashes",
-            F.array_distinct(
-                fast_shingle_hashes(F.col("shingles"))
-            ).cast("array<int>"),
-        )
-    prepared = sh.withColumn("n_shingles", F.size("sh_hashes")).select(
-        "file_id", "norm", "sh_hashes", "n_shingles"
-    )
+    src, src_parts, heavy_par = balance_source(df)
+    groups = norm_groups(hash_input(src))
+    prepared = prepare(representatives(src, src_parts, heavy_par, groups), cfg)
     dump("pipeline_prepared", prepared)
 
-    from project_cascade_spark.functions.kernels import apply_minhash
-    from project_cascade_spark.operators.minhash_lsh import candidate_pairs
-
-    signatures = prepared.withColumn(
-        "minhash", apply_minhash(F.col("sh_hashes"), cfg)
-    ).select("file_id", "n_shingles", "minhash")
-    try:
-        cand = candidate_pairs(
-            signatures, "file_id", "minhash", cfg, cap_buckets=True,
-            size_col="n_shingles", hash_bands=True, dedup=False,
-        )
-    except TypeError:  # round-start signature
-        cand = candidate_pairs(
-            signatures, "file_id", "minhash", cfg, cap_buckets=True,
-            size_col="n_shingles",
-        )
+    cand = candidate_pairs(
+        minhash_signatures(prepared, cfg), "file_id", "minhash", cfg,
+        cap_buckets=True, size_col="n_shingles", hash_bands=True, dedup=False,
+    )
     dump("pipeline_lsh_candidates", cand)
-    dedup = cand.groupBy("id_a", "id_b").agg(F.max(F.lit(1)).alias("_m"))
-    scored = jaccard_verify(
-        dedup, prepared, "file_id", "sh_hashes", cfg, keep_below=True
-    )
-    dump("pipeline_verify", scored)
+    short_pairs = simhash_candidate_pairs(
+        short_simhash(prepared, cfg), "file_id", "simhash", cfg
+    ).select("id_a", "id_b")
+    dump("pipeline_verify", verify_edges(tag_candidates(cand, short_pairs), prepared, cfg))
 
-    from project_cascade_spark.operators.suffix import (
-        add_fingerprints_pos,
-        fingerprint_anchor_pairs,
+    anch = fingerprint_anchor_pairs(
+        positional_prints(prepared, cfg), "file_id", "fps_pos", cfg,
+        template_filter=True, max_occ_per_doc=0,
     )
-
-    try:
-        fps = add_fingerprints_pos(
-            base, "norm", cfg, max_occ_per_doc=16
-        ).select("file_id", "fps_pos")
-        anch = fingerprint_anchor_pairs(
-            fps, "file_id", "fps_pos", cfg, template_filter=True,
-            max_occ_per_doc=0,
-        )
-    except TypeError:  # round-start signature
-        fps = add_fingerprints_pos(base, "norm", cfg).select(
-            "file_id", "fps_pos"
-        )
-        anch = fingerprint_anchor_pairs(
-            fps, "file_id", "fps_pos", cfg, template_filter=True
-        )
     dump("pipeline_anchor_pairs", anch)
     spark.stop()
 
