@@ -31,6 +31,10 @@ datagen.py               deterministic code_files generator with planted
                          near-dup groups (ground truth for recall tests).
 oracle.py                DuckDB-dialect SQL generators mirroring every
                          operator, for the driver's correctness gate.
+_zipimport.py            stat guard on zipimporter.invalidate_caches: stops
+                         each Python worker task re-reading pyspark.zip.
 """
+
+from . import _zipimport  # noqa: F401  (installs the worker-side zip cache guard)
 
 __version__ = "0.1.0"

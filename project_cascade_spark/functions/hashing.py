@@ -31,15 +31,6 @@ def shingle_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda s: hash60(s) % MERSENNE31)
 
 
-def fast_kgram_hashes(col: Column, k: int) -> Column:
-    """xxhash64 k-gram hashes (pipeline-internal winnowing)."""
-    n = F.length(col)
-    m = F.greatest(n - F.lit(k - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), m), lambda i: F.xxhash64(F.substring(col, i, k))
-    )
-
-
 def token_hashes(toks: Column) -> Column:
     """array<string> tokens → array<long> full 60-bit (SimHash features)."""
     return F.transform(toks, hash60)

@@ -137,7 +137,7 @@ def make_simhash_udf(cfg: CascadeConfig):
 # Rolling-hash text kernels — the scale path for char-gram hashing.
 #
 # The JVM expression forms (char_shingles → xxhash64 per shingle,
-# fast_kgram_hashes → xxhash64 per position) materialize one k-char substring
+# hashing.kgram_hashes → hash60 per position) materialize one k-char substring
 # PLUS one hash call per character of every document: at a 600-char file and
 # winnow_k=48 that is ~26 KB hashed and ~550 string allocations per row —
 # profiled as the two dominant pipeline stages (02_prepared +
@@ -148,7 +148,7 @@ def make_simhash_udf(cfg: CascadeConfig):
 # uint64), finished with a splitmix64-style mixer.  Only used on
 # pipeline-internal paths (no DuckDB parity requirement — the md5-based
 # hash60 primitives remain the oracle path); hash VALUES differ from the
-# old xxhash64 forms, which only shifts chance collisions: LSH candidates
+# JVM forms, which only shifts chance collisions: LSH candidates
 # are exact-Jaccard-verified and winnow anchors are verified by real
 # character comparison, so operator semantics are unchanged.
 # ---------------------------------------------------------------------------

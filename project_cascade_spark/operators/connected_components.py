@@ -100,7 +100,10 @@ def connected_components(
     in-driver union-find (each distributed iteration costs several shuffle
     rounds of fixed latency — pure overhead when the edges fit in one task);
     larger sets run the alternating large-star/small-star joins.  Pass
-    driver_threshold=0 to force the distributed path (tests do).
+    driver_threshold=0 to force the distributed path (tests do).  The
+    distributed loop raises RuntimeError when `max_iter` iterations pass
+    without two equal edge checksums, rather than return an unconverged
+    edge set.
     """
     e = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
@@ -129,6 +132,11 @@ def connected_components(
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            f"iterations ({prev[0]} edges after the last one)"
+        )
     # converged: every edge is (member, root) with root = component min
     members = e.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
     roots = e.select(F.col("v").alias("id"), F.col("v").alias("cluster_id"))

@@ -44,20 +44,12 @@ def add_fingerprints(
     cfg: CascadeConfig,
     out_col: str = "fingerprints",
     use_kernel: bool = True,
-    fast_hash: bool = False,
 ) -> DataFrame:
     """k-gram hashes are materialized as a column first (see
     functions/hashing.kgram_hashes for why), then winnowed — via the O(m)
     rolling-min Arrow kernel by default, or the expression form for the
-    oracle-parity path.  fast_hash=True swaps md5 for xxhash64 (pipeline
-    path; no oracle parity needed)."""
-    if fast_hash:
-        from ..functions.hashing import fast_kgram_hashes
-
-        grams = fast_kgram_hashes(F.col(text_col), cfg.winnow_k)
-    else:
-        grams = kgram_hashes(F.col(text_col), cfg.winnow_k)
-    df = df.withColumn("_grams", grams)
+    oracle-parity path."""
+    df = df.withColumn("_grams", kgram_hashes(F.col(text_col), cfg.winnow_k))
     if use_kernel:
         df = df.withColumn(out_col, make_winnow_udf(cfg)(F.col("_grams")))
     else:

@@ -47,3 +47,13 @@ def test_driver_union_find_matches_distributed(spark):
     dist = _cc(spark, edges, driver_threshold=0)
     local = _cc(spark, edges, driver_threshold=10**6)
     assert dist == local
+
+
+def test_max_iter_without_convergence_raises(spark):
+    edges = [(i, i + 1) for i in range(63)]  # 64-node chain
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match=r"max_iter=2 .*\d+ edges"):
+        connected_components(df, driver_threshold=0, max_iter=2)
+    got = _cc(spark, edges)
+    assert set(got.values()) == {0}
+    assert len(got) == 64

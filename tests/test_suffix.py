@@ -160,7 +160,7 @@ def test_anchored_spark_path_matches_gram_set_path(spark):
         rows.append((i, body))
     docs = spark.createDataFrame(rows, "id long, norm string")
 
-    fps_old = add_fingerprints(docs, "norm", cfg, fast_hash=True)
+    fps_old = add_fingerprints(docs, "norm", cfg)
     cand_old = fingerprint_candidate_pairs(
         fps_old, "id", "fingerprints", cfg, template_filter=True
     )
