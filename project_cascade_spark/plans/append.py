@@ -254,10 +254,10 @@ def _bump_epoch(root: str, epoch: int) -> None:
 
 
 def _base_tokens_digest(base: StageStore, epoch: int) -> str:
-    """Identity of the base state an append builds on: the sha256 chain
-    tokens of every consumed stage.  A base recomputed from different
+    """Identity of the base state an append builds on: the stage tokens
+    of every consumed stage.  A base recomputed from different
     input/config produces different tokens, so a stale append resume can
-    never be served against a new base (the token-chain contract extended
+    never be served against a new base (the token contract extended
     across runs)."""
     h = hashlib.sha256()
     for stage in BASE_STAGES:
@@ -531,7 +531,7 @@ def compact(
     crashed compaction cannot lose state — rerun it; Iceberg's
     rewrite_data_files is the snapshot-native form of the same move).
 
-    The destination serves --append and reads; its stage tokens chain from
+    The destination serves --append and reads; its stage tokens derive from
     the SOURCE's token digest (not from a job input fingerprint), so a
     from-scratch job pointed at root_dst recomputes rather than resuming —
     compacted dirs are append-owned by construction.

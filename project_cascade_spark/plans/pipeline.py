@@ -20,9 +20,13 @@ code_files(repo, path, commit, lang, content):
                           per-pair suffix array — NOT merged into clusters
 
 Every stage can be checkpointed through a StageStore (resume semantics);
-pass store=None for a single fused run (small scale / benchmarks).  Stage
-bodies are module-level frame → frame functions, shared with
-plans/append.py (over a batch's delta) and link_tables (prepare).
+pass store=None for a single fused run (small scale / benchmarks).  Both
+modes share one execution shape: the same stages, submitted in the same
+order, with the same two thread pools overlapping independent stages —
+only what a stage's run() does differs (durable parquet vs
+localCheckpoint / lazy).  Stage bodies are module-level frame → frame
+functions, shared with plans/append.py (over a batch's delta) and
+link_tables (prepare).
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..config import CascadeConfig
 from ..functions.kernels import apply_minhash, char_shingle_hashes_kernel
@@ -285,30 +290,36 @@ def dedup_pipeline(
         lambda: prepare(representatives(src, src_parts, heavy_par, norm_reps_df), cfg),
     )
 
+    def run_concurrently(stages: list) -> list[DataFrame]:
+        """run() each (stage, fn) from its own pool thread.  Every thread
+        inherits the caller's local properties (job group, scheduler pool),
+        so a caller's cancelJobGroup reaches the pool's jobs; the target is
+        wrapped per submit, so each thread gets its own copy of them."""
+        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(code_files.sparkSession)(run), name, fn)
+                for name, fn in stages
+            ]
+            return [f.result() for f in futures]
+
     # --- independent post-prepared stages (signatures, short-doc simhash,
-    # positional prints) share no dependencies: in the fused no-store run
-    # they are submitted from a small thread pool so one stage's job tail
-    # back-fills cores with another's tasks (guide §2.6) instead of paying
-    # three flat stage latencies back to back.  With a store the chain
-    # stays sequential — StageStore's resume token is an ORDERED sha256
-    # chain of upstream stage names, so parallel run() calls would race it.
+    # positional prints) share no dependencies: they are submitted from a
+    # small thread pool so one stage's job tail back-fills cores with
+    # another's tasks (guide §2.6) instead of paying three flat stage
+    # latencies back to back.  A StageStore token depends only on the
+    # fingerprint and the stage name, so concurrent run() calls are safe.
     #
     # Signatures and prints are persisted: candidate_pairs self-joins the
     # band table (and fingerprint_anchor_pairs the print table), so an
     # unpersisted column would run its kernel TWICE (once per join side) —
     # measured as the dominant stage at 30k files.
-    overlap = store is None
     post_prepared = [
         ("03a_signatures", minhash_signatures),
         ("04a_simhash", short_simhash),
     ] + ([("08a_fingerprints_pos", positional_prints)] if with_substring_pass else [])
-    fns = [(name, lambda f=f: f(prepared, cfg)) for name, f in post_prepared]
-    if overlap:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futures = [pool.submit(run, name, fn) for name, fn in fns]
-            outs = [f.result() for f in futures]
-    else:
-        outs = [run(name, fn) for name, fn in fns]
+    outs = run_concurrently(
+        [(name, lambda f=f: f(prepared, cfg)) for name, f in post_prepared]
+    )
     signatures, short_sim = outs[:2]
     fps = outs[2] if with_substring_pass else None
 
@@ -347,24 +358,17 @@ def dedup_pipeline(
             persist_fps=True,   # self-join: avoid computing the chain twice
         )
 
-    anchor_cand = None
-    if overlap and with_substring_pass:
-        # guide §2.6 again: the anchor-candidate derivation (print explode
-        # → template filter → self-join → anchor groupBy) depends only on
-        # `fps`, yet as a lazy subtree it ran AFTER the dominant edges
-        # verify inside the final action.  In the fused run, materialize
-        # it concurrently with 05_edges so its jobs back-fill the verify
-        # stage's tail (measured ~8 s of independent work at n8/100k
-        # against a ~26 s edges wall).  The StageStore path keeps the
-        # sequential lazy shape — its durable stage chain is ORDERED and
-        # 08's token must stay derived from the same chain as before.
-        with ThreadPoolExecutor(max_workers=2) as pool2:
-            f_edges = pool2.submit(run, "05_edges", _edges)
-            f_cand = pool2.submit(run, "08b_anchor_cands", _anchor_cand)
-            edges = f_edges.result()
-            anchor_cand = f_cand.result()
-    else:
-        edges = run("05_edges", _edges)
+    # guide §2.6 again: the anchor-candidate derivation (print explode →
+    # template filter → self-join → anchor groupBy) depends only on `fps`,
+    # yet as a lazy subtree it would run AFTER the dominant edges verify
+    # inside the final action.  Materialize it as its own stage,
+    # concurrently with 05_edges, so its jobs back-fill the verify stage's
+    # tail (measured ~8 s of independent work at n8/100k against a ~26 s
+    # edges wall).
+    edges, *anchor = run_concurrently(
+        [("05_edges", _edges)]
+        + ([("08b_anchor_cands", _anchor_cand)] if with_substring_pass else [])
+    )
 
     rep_clusters = run(
         "06_clusters", lambda: connected_components(edges, "id_a", "id_b"), persist=False
@@ -405,13 +409,11 @@ def dedup_pipeline(
     if with_substring_pass:
 
         # the anchored-extension design notes live on add_fingerprints_pos /
-        # verify_long_substring_anchored.  In the fused run the candidate
-        # table was already materialized concurrently with 05_edges above.
+        # verify_long_substring_anchored.
         def _substr() -> DataFrame:
-            cand = anchor_cand if anchor_cand is not None else _anchor_cand()
             # long-substring pairs that are ALSO near-dups are already edges;
             # the side output reports the rest (shared-block detection).
-            fresh = cand.join(edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
+            fresh = anchor[0].join(edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
             return verify_long_substring_anchored(fresh, prepared, "file_id", "norm", cfg)
 
         substring_pairs = run("08_substring_pairs", _substr, persist=False)

@@ -14,12 +14,15 @@ Spark-shaped:
   drawn from Iceberg's own `.files` metadata table (tests/test_iceberg.py;
   the test skips in this sandbox, which bundles no runtime jar);
 - resume is token-validated, not existence-only: every stage dir carries a
-  `_cascade_token` = sha256 chain of (pipeline fingerprint → every upstream
-  stage name).  Re-running with a different --input or config changes the
-  fingerprint, so every stage recomputes instead of silently serving stale
-  data; deleting one stage dir recomputes exactly that stage (the
-  deterministic recompute re-produces the same token, so downstream stages
-  stay valid);
+  `_cascade_token` = sha256(pipeline fingerprint : stage name).  Re-running
+  with a different --input or config changes the fingerprint, so every
+  stage recomputes instead of silently serving stale data; deleting one
+  stage dir recomputes exactly that stage (the deterministic recompute
+  re-produces the same token, so downstream stages stay valid).  What a
+  stage computes from its upstream stages is fixed by the code, so the
+  token needs no upstream part: it does not depend on which other stages
+  ran, or in what order — toggling the substring pass invalidates nothing,
+  and independent stages may run() concurrently from a thread pool;
 - a `_state` parquet table records (stage, n_rows, wall_s) per completed
   stage — the `_pipeline_state` analogue;
 - a `_lineage` parquet table records per-output-file row counts per stage
@@ -36,6 +39,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,11 +76,12 @@ class StageStore:
             spark.sql(
                 f"CREATE NAMESPACE IF NOT EXISTS {iceberg_catalog}.{namespace}"
             )
-        # chain starts at the pipeline fingerprint (input identity + config);
-        # each run() advances it by the stage name, so a stage's expected
-        # token encodes everything upstream of it.
-        self._chain = hashlib.sha256(fingerprint.encode()).hexdigest()
+        self._fingerprint = fingerprint  # input identity + config
         self.computed: list[str] = []   # stages computed (not resumed) this run
+        # concurrent run() calls write distinct stage dirs, but share the
+        # _state/_lineage append tables: two appending jobs share
+        # <table>/_temporary and the first commit deletes it
+        self._lock = threading.Lock()
         os.makedirs(self.root, exist_ok=True)
 
     def _path(self, stage: str) -> str:
@@ -96,7 +101,7 @@ class StageStore:
         return os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
 
     def _valid(self, stage: str, expected: str) -> bool:
-        """Stage output present AND produced under the same upstream chain."""
+        """Stage output present AND produced under the same token."""
         if not self.exists(stage):
             return False
         try:
@@ -161,12 +166,13 @@ class StageStore:
             [(stage, f, c) for f, c in per_file],
             "stage string, part string, n_rows long",
         )
-        lineage.write.mode("append").parquet(f"{self.root}/_lineage")
         state = self.spark.createDataFrame(
             [(stage, n, time.time() - t0, snapshot_id)],
             "stage string, n_rows long, wall_s double, snapshot_id long",
         )
-        state.write.mode("append").parquet(f"{self.root}/_state")
+        with self._lock:
+            lineage.write.mode("append").parquet(f"{self.root}/_lineage")
+            state.write.mode("append").parquet(f"{self.root}/_state")
         if token is not None:
             with open(self._token_path(stage), "w") as f:
                 f.write(token)
@@ -179,13 +185,14 @@ class StageStore:
 
     def run(self, stage: str, fn) -> DataFrame:
         """Compute-or-resume with invalidation: resume only when the stage's
-        recorded token matches the current chain (same fingerprint, same
-        upstream stages); otherwise recompute and overwrite."""
-        expected = hashlib.sha256(f"{self._chain}:{stage}".encode()).hexdigest()
-        self._chain = expected
+        recorded token matches sha256(fingerprint:stage); otherwise
+        recompute and overwrite.  Safe to call from several threads for
+        distinct stages."""
+        expected = hashlib.sha256(f"{self._fingerprint}:{stage}".encode()).hexdigest()
         if self._valid(stage, expected):
             return self.read(stage)
-        self.computed.append(stage)
+        with self._lock:
+            self.computed.append(stage)
         return self.write(stage, fn(), token=expected)
 
     def state(self) -> DataFrame:

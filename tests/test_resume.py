@@ -8,13 +8,19 @@ Contract under test (sources/sinks.py StageStore):
 3. changing the fingerprint (different input identity / config — the
    reference's ClearFiles trigger, setup.py:57-98) invalidates EVERY stage
    instead of silently serving stale data;
-4. the spark-submit job surface round-trips the same way (subprocess).
+4. a stage's token is (fingerprint, stage): neither the order in which
+   stages run nor which other stages ran invalidates it, and concurrent
+   run() calls record every stage;
+5. the durable dedup_pipeline runs the fused run's shape (same stages, same
+   thread pools) and returns the same rows;
+6. the spark-submit job surface round-trips the same way (subprocess).
 """
 
 import json
 import shutil
 import subprocess
 import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -106,6 +112,125 @@ def test_pipeline_resume_byte_identical(spark, tmp_path):
     res3 = dedup_pipeline(df, CODE_CONFIG, store=st3, with_substring_pass=False)
     assert st3.computed == ["06_clusters"]
     assert _rows(res3.assignments.select("file_id", "cluster_id")) == a1
+
+
+def test_resume_ignores_stage_order(spark, tmp_path):
+    root = str(tmp_path / "store")
+    st1 = StageStore(spark, root, fingerprint="fp-a")
+    out1 = _rows(_chain(st1, spark, 3))
+
+    st2 = StageStore(spark, root, fingerprint="fp-a")
+    st2.run("s2", lambda: spark.range(1))
+    out2 = _rows(st2.run("s1", lambda: spark.range(1)))
+    assert st2.computed == []          # s2 before s1 still resumes both
+    assert out2 == _rows(st1.read("s1"))
+    assert out1 == _rows(st2.read("s2"))
+
+
+def test_concurrent_runs_record_every_stage(spark, tmp_path):
+    """Stage dirs are distinct, but _state/_lineage are shared append
+    tables: concurrent run() calls must not lose or fail their rows.  More
+    threads than local[4] cores, with a short switch interval."""
+    root = str(tmp_path / "store")
+    st = StageStore(spark, root, fingerprint="fp-a")
+    names = [f"t{i}" for i in range(6)]
+    errors = []
+
+    def target(name):
+        try:
+            st.run(name, lambda: spark.range(10))
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=target, args=(n,)) for n in names]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert sorted(st.computed) == names
+    assert sorted(r["stage"] for r in st.state().collect()) == names
+    assert {r["stage"] for r in st.lineage().collect()} == set(names)
+
+
+@pytest.fixture(scope="module")
+def durable_substring_run(spark, tmp_path_factory):
+    """One durable dedup_pipeline with the substring pass over a fresh
+    workdir: (input frame, workdir, result)."""
+    from project_cascade_spark.config import CODE_CONFIG
+    from project_cascade_spark.datagen import generate_code_files
+    from project_cascade_spark.plans.pipeline import dedup_pipeline
+    from project_cascade_spark.sources.tables import load_code_files
+
+    root = str(tmp_path_factory.mktemp("durable") / "wd")
+    pdf, _ = generate_code_files(200, seed=42)
+    df = load_code_files(spark, pdf)
+    store = StageStore(spark, root, fingerprint="synth:200|code")
+    res = dedup_pipeline(df, CODE_CONFIG, store=store, with_substring_pass=True)
+    assert "08b_anchor_cands" in store.computed
+    return df, root, res
+
+
+def test_durable_run_equals_fused_run(durable_substring_run):
+    from project_cascade_spark.config import CODE_CONFIG
+    from project_cascade_spark.plans.pipeline import dedup_pipeline
+
+    df, _root, durable = durable_substring_run
+    fused = dedup_pipeline(df, CODE_CONFIG, store=None, with_substring_pass=True)
+    for name in ("assignments", "edges", "substring_pairs"):
+        a, b = getattr(durable, name), getattr(fused, name)
+        assert a.exceptAll(b).count() == 0, name
+        assert b.exceptAll(a).count() == 0, name
+    assert fused.substring_pairs.count() > 0
+
+
+def test_substring_toggle_resumes_every_stage(spark, durable_substring_run):
+    """Dropping the substring pass over a finished workdir reuses every
+    stage it still needs — tokens do not depend on which stages ran."""
+    from project_cascade_spark.config import CODE_CONFIG
+    from project_cascade_spark.plans.pipeline import dedup_pipeline
+
+    df, root, durable = durable_substring_run
+    st = StageStore(spark, root, fingerprint="synth:200|code")
+    res = dedup_pipeline(df, CODE_CONFIG, store=st, with_substring_pass=False)
+    assert st.computed == []
+    cols = ("file_id", "cluster_id")
+    assert _rows(res.assignments.select(*cols)) == \
+        _rows(durable.assignments.select(*cols))
+
+
+def test_pool_jobs_inherit_caller_job_group(spark, monkeypatch):
+    """Stages submitted from the pipeline's thread pools run under the
+    caller's local properties, so the caller's cancelJobGroup reaches them."""
+    from project_cascade_spark.config import CODE_CONFIG
+    from project_cascade_spark.datagen import generate_code_files
+    from project_cascade_spark.plans import pipeline
+    from project_cascade_spark.sources.tables import load_code_files
+
+    sc = spark.sparkContext
+    seen = []
+    original = pipeline.minhash_signatures
+
+    def recording(prepared, cfg):
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return original(prepared, cfg)
+
+    monkeypatch.setattr(pipeline, "minhash_signatures", recording)
+    pdf, _ = generate_code_files(60, seed=3)
+    sc.setJobGroup("caller-group", "dedup under a caller's job group")
+    try:
+        pipeline.dedup_pipeline(
+            load_code_files(spark, pdf), CODE_CONFIG, with_substring_pass=False
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert seen == ["caller-group"]
 
 
 @pytest.mark.slow
