@@ -499,19 +499,19 @@ def run_append_bench() -> None:
     leg["base_wall_s"] = base["wall_s"]
     emit()
 
-    import duckdb
+    from project_cascade_spark.sources.sinks import stage_records
 
     for i in range(APPEND_EPOCHS):
         time.sleep(COOLDOWN_SMALL_S)
         inc = job("--input", paths[f"batch{i}"], "--workdir", wd, "--append")
         leg["epoch_walls_s"].append(inc["wall_s"])
-        # stage work of the epoch alone from the store's _state ledger —
+        # stage work of the epoch alone from the store's stage records —
         # per-action job latency (which amortizes away on long production
         # runs) excluded
-        stage_wall = duckdb.query(
-            f"select sum(wall_s) from '{wd}/_state/*.parquet' "
-            f"where stage like 'e{i + 1}%'"
-        ).fetchone()[0]
+        stage_wall = sum(
+            r["wall_s"] for r in stage_records(wd)
+            if r["stage"].startswith(f"e{i + 1}")
+        )
         leg["epoch_stage_walls_s"].append(round(stage_wall, 2))
         leg["clusters_final"] = inc["clusters"]
         leg["files_final"] = inc["files"]
@@ -525,9 +525,7 @@ def run_append_bench() -> None:
     # stage-work comparison with per-action job latency excluded on BOTH
     # sides (at this small leg size the ~12s JVM startup + flat action
     # tails dominate the job walls; production runs amortize them away)
-    full_stage = duckdb.query(
-        f"select sum(wall_s) from '{wd_full}/_state/*.parquet'"
-    ).fetchone()[0]
+    full_stage = sum(r["wall_s"] for r in stage_records(wd_full))
     leg["full_union_stage_wall_s"] = round(full_stage, 2)
     leg["append_stage_speedup_vs_full"] = round(
         full_stage / leg["epoch_stage_walls_s"][-1], 2

@@ -78,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
     from project_cascade_spark.config import CODE_CONFIG, DEFAULT_CONFIG
     from project_cascade_spark.plans.pipeline import dedup_pipeline
     from project_cascade_spark.session import build_session
-    from project_cascade_spark.sources.sinks import StageStore
+    from project_cascade_spark.sources.sinks import StageStore, stage_records
     from project_cascade_spark.sources.tables import load_code_files
 
     cfg = CODE_CONFIG if args.preset == "code" else DEFAULT_CONFIG
@@ -239,6 +239,8 @@ def main(argv: list[str] | None = None) -> int:
             "files_per_sec": round(n_files / wall, 1),
             "resumable": bool(args.workdir),
             "computed_stages": store.computed if store else None,
+            "stages": [{k: v for k, v in r.items() if k != "parts"}
+                       for r in stage_records(args.workdir)] if store else None,
             "config_sweep": sweep_report,
         }))
     spark.stop()

@@ -91,7 +91,7 @@ from ..operators.suffix import (
     fingerprint_anchor_pairs_linkage,
     verify_long_substring_anchored,
 )
-from ..sources.sinks import StageStore
+from ..sources.sinks import StageStore, read_stage_file
 from .pipeline import (
     balance_source,
     hash_input,
@@ -263,8 +263,7 @@ def _base_tokens_digest(base: StageStore, epoch: int) -> str:
     for stage in BASE_STAGES:
         names = [stage] + [_delta_name(stage, e) for e in range(1, epoch + 1)]
         for name in names:
-            with open(base._token_path(name)) as f:
-                h.update(f.read().strip().encode())
+            h.update(read_stage_file(base._token_path(name))[0].encode())
     return h.hexdigest()
 
 

@@ -10,7 +10,7 @@ Spark-shaped:
 - each stage writes atomically to <root>/<stage>/ as parquet, or — when a
   registered Iceberg catalog is passed and the runtime jar is on the
   classpath — as an Iceberg table via `createOrReplace` (atomic snapshot
-  swap), with the committed snapshot_id recorded in `_state` and lineage
+  swap), with the committed snapshot_id recorded in its record and lineage
   drawn from Iceberg's own `.files` metadata table (tests/test_iceberg.py;
   the test skips in this sandbox, which bundles no runtime jar);
 - resume is token-validated, not existence-only: every stage dir carries a
@@ -23,26 +23,45 @@ Spark-shaped:
   token needs no upstream part: it does not depend on which other stages
   ran, or in what order — toggling the substring pass invalidates nothing,
   and independent stages may run() concurrently from a thread pool;
-- a `_state` parquet table records (stage, n_rows, wall_s) per completed
-  stage — the `_pipeline_state` analogue;
-- a `_lineage` parquet table records per-output-file row counts per stage
-  (north_rule: "per-partition lineage + metrics").  Counts come from the
-  parquet FOOTERS of the just-written files — metadata only, zero data
-  re-scan (the previous implementation re-scanned each stage output twice;
-  at 100 TB that triples stage I/O).
+- the token file is also the stage's record, the `_pipeline_state`
+  analogue with per-output-file lineage: line 1 the token, line 2 the JSON
+  {stage, n_rows, wall_s, snapshot_id, parts: [[part, n_rows], ...]}.
+  Counts come from parquet FOOTERS — metadata only, zero data re-scan.
+  The file is promoted with os.replace, so a rewrite replaces the record
+  whole; a token file of one line (written before records) still resumes.
 
-Resume contract is pytest-covered: tests/test_resume.py (unit) and the
-subprocess spark-submit round trip in tests/test_resume.py::test_job_resume.
+Resume contract: tests/test_resume.py (unit, pipeline and spark-submit).
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import json
 import os
 import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+TOKEN = "_cascade_token"
+
+
+def read_stage_file(path: str) -> tuple[str, dict | None]:
+    """(token, record) of a stage's token file: line 1, and line 2 parsed
+    (None when absent, as in files written before records; a torn record
+    raises ValueError)."""
+    with open(path) as f:
+        token, _, record = f.read().partition("\n")
+    return token.strip(), (json.loads(record) if record.strip() else None)
+
+
+def stage_records(root: str) -> list[dict]:
+    """The record of every stage under a store root, sorted by stage."""
+    root = glob.escape(root.rstrip("/"))
+    paths = glob.glob(f"{root}/*/{TOKEN}") + glob.glob(f"{root}/*.{TOKEN}")
+    records = [r for _, r in map(read_stage_file, paths) if r is not None]
+    return sorted(records, key=lambda r: r["stage"])
 
 
 class StageStore:
@@ -56,10 +75,9 @@ class StageStore:
     ):
         """iceberg_catalog: name of a registered Iceberg catalog (see
         session.enable_iceberg_catalog).  When set, stages are Iceberg
-        tables written with createOrReplace (atomic snapshot swap) and the
-        _state row records the committed snapshot id; `root` still holds
-        the token files and the _state/_lineage parquet.  Requires the
-        iceberg-spark-runtime jar (session.iceberg_available)."""
+        tables written with createOrReplace (atomic snapshot swap), the
+        committed snapshot id goes into the record, and `root` holds the
+        token files.  Requires the iceberg-spark-runtime jar."""
         self.spark = spark
         self.root = root.rstrip("/")
         self.catalog = iceberg_catalog
@@ -78,10 +96,7 @@ class StageStore:
             )
         self._fingerprint = fingerprint  # input identity + config
         self.computed: list[str] = []   # stages computed (not resumed) this run
-        # concurrent run() calls write distinct stage dirs, but share the
-        # _state/_lineage append tables: two appending jobs share
-        # <table>/_temporary and the first commit deletes it
-        self._lock = threading.Lock()
+        self._lock = threading.Lock()   # guards `computed` across run() threads
         os.makedirs(self.root, exist_ok=True)
 
     def _path(self, stage: str) -> str:
@@ -92,8 +107,8 @@ class StageStore:
 
     def _token_path(self, stage: str) -> str:
         if self.catalog:
-            return os.path.join(self.root, f"{stage}._cascade_token")
-        return os.path.join(self._path(stage), "_cascade_token")
+            return os.path.join(self.root, f"{stage}.{TOKEN}")
+        return os.path.join(self._path(stage), TOKEN)
 
     def exists(self, stage: str) -> bool:
         if self.catalog:
@@ -101,38 +116,22 @@ class StageStore:
         return os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
 
     def _valid(self, stage: str, expected: str) -> bool:
-        """Stage output present AND produced under the same token."""
+        """Stage output present, produced under the same token, record
+        intact."""
         if not self.exists(stage):
             return False
         try:
-            with open(self._token_path(stage)) as f:
-                return f.read().strip() == expected
-        except OSError:
+            return read_stage_file(self._token_path(stage))[0] == expected
+        except (OSError, ValueError):
             return False
 
     def _footer_counts(self, path: str) -> list[tuple[str, int]]:
         """(file, n_rows) per output part from parquet footers — metadata
-        only.  Falls back to one Spark scan for non-local filesystems."""
-        try:
-            import pyarrow.parquet as pq
+        only."""
+        import pyarrow.parquet as pq
 
-            out = []
-            for name in sorted(os.listdir(path)):
-                if name.endswith(".parquet"):
-                    out.append(
-                        (name, pq.ParquetFile(os.path.join(path, name)).metadata.num_rows)
-                    )
-            return out
-        except (OSError, ImportError):
-            from pyspark.sql import functions as F
-
-            rows = (
-                self.spark.read.parquet(path)
-                .groupBy(F.input_file_name().alias("f"))
-                .count()
-                .collect()
-            )
-            return [(r["f"], r["count"]) for r in rows]
+        names = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+        return [(n, pq.ParquetFile(f"{path}/{n}").metadata.num_rows) for n in names]
 
     def _write_iceberg(self, stage: str) -> tuple[list[tuple[str, int]], int | None]:
         """(per-file lineage, snapshot_id) from Iceberg's own metadata
@@ -156,26 +155,17 @@ class StageStore:
         if self.catalog:
             # atomic snapshot swap: readers see the old table until commit
             df.writeTo(self._ident(stage)).using("iceberg").createOrReplace()
-            per_file, snapshot_id = self._write_iceberg(stage)
+            parts, snapshot_id = self._write_iceberg(stage)
         else:
             path = self._path(stage)
             df.write.mode("overwrite").parquet(path)
-            per_file = self._footer_counts(path)
-        n = sum(c for _, c in per_file)
-        lineage = self.spark.createDataFrame(
-            [(stage, f, c) for f, c in per_file],
-            "stage string, part string, n_rows long",
-        )
-        state = self.spark.createDataFrame(
-            [(stage, n, time.time() - t0, snapshot_id)],
-            "stage string, n_rows long, wall_s double, snapshot_id long",
-        )
-        with self._lock:
-            lineage.write.mode("append").parquet(f"{self.root}/_lineage")
-            state.write.mode("append").parquet(f"{self.root}/_state")
-        if token is not None:
-            with open(self._token_path(stage), "w") as f:
-                f.write(token)
+            parts = self._footer_counts(path)
+        record = dict(stage=stage, n_rows=sum(c for _, c in parts),
+                      wall_s=time.time() - t0, snapshot_id=snapshot_id, parts=parts)
+        dest = self._token_path(stage)
+        with open(dest + ".tmp", "w") as f:
+            f.write(f"{token or ''}\n{json.dumps(record)}\n")
+        os.replace(dest + ".tmp", dest)  # atomic promotion
         return self.read(stage)
 
     def read(self, stage: str) -> DataFrame:
@@ -196,7 +186,14 @@ class StageStore:
         return self.write(stage, fn(), token=expected)
 
     def state(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.root}/_state")
+        cols = ("stage", "n_rows", "wall_s", "snapshot_id")
+        return self.spark.createDataFrame(
+            [tuple(r[c] for c in cols) for r in stage_records(self.root)],
+            "stage string, n_rows long, wall_s double, snapshot_id long",
+        )
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.root}/_lineage")
+        return self.spark.createDataFrame(
+            [(r["stage"], *p) for r in stage_records(self.root) for p in r["parts"]],
+            "stage string, part string, n_rows long",
+        )

@@ -3,11 +3,13 @@
 Contract under test (sources/sinks.py StageStore):
 1. re-running the same pipeline over the same workdir resumes every stage
    (zero recomputes) and returns byte-identical outputs;
-2. deleting one stage dir recomputes exactly that stage (deterministic
-   recompute ⇒ same token ⇒ downstream stays valid);
+2. deleting one stage dir, its record file or the tail of its record
+   recomputes exactly that stage (deterministic recompute ⇒ same token ⇒
+   downstream stays valid);
 3. changing the fingerprint (different input identity / config — the
    reference's ClearFiles trigger, setup.py:57-98) invalidates EVERY stage
-   instead of silently serving stale data;
+   instead of silently serving stale data, and each recomputed stage's
+   record replaces the old one; keeping the record launches no Spark job;
 4. a stage's token is (fingerprint, stage): neither the order in which
    stages run nor which other stages ran invalidates it, and concurrent
    run() calls record every stage;
@@ -17,6 +19,7 @@ Contract under test (sources/sinks.py StageStore):
 """
 
 import json
+import os
 import shutil
 import subprocess
 import sys
@@ -53,16 +56,55 @@ def test_resume_skips_all_stages(spark, tmp_path):
     assert out1 == out2
 
 
-def test_deleted_stage_recomputes_only_itself(spark, tmp_path):
+def _drop_stage_dir(root):
+    shutil.rmtree(f"{root}/s1")
+
+
+def _drop_record(root):
+    os.remove(f"{root}/s1/_cascade_token")
+
+
+def _tear_record(root):
+    """A write killed mid-record: the token line survives, the JSON not."""
+    path = f"{root}/s1/_cascade_token"
+    with open(path) as f:
+        text = f.read()
+    with open(path, "w") as f:
+        f.write(text[: text.index("\n") + 20])
+
+
+def _token_only(root):
+    """Token files as written before records: line 1 alone."""
+    for stage in ("s1", "s2"):
+        path = f"{root}/{stage}/_cascade_token"
+        with open(path) as f:
+            token = f.readline().strip()
+        with open(path, "w") as f:
+            f.write(token)
+
+
+@pytest.mark.parametrize(
+    "damage, recomputed",
+    [(_drop_stage_dir, ["s1"]), (_drop_record, ["s1"]),
+     (_tear_record, ["s1"]), (_token_only, [])],
+    ids=["stage_dir", "record_file", "torn_record", "token_only"],
+)
+def test_deleted_stage_recomputes_only_itself(spark, tmp_path, damage, recomputed):
+    """A run killed mid-chain resumes to identical output: whether s1's dir,
+    its record file or the tail of its record is gone, exactly s1
+    recomputes; token files of one line still resume."""
     root = str(tmp_path / "store")
     st1 = StageStore(spark, root, fingerprint="fp-a")
     out1 = _rows(_chain(st1, spark, 3))
 
-    shutil.rmtree(f"{root}/s1")
+    damage(root)
     st2 = StageStore(spark, root, fingerprint="fp-a")
     out2 = _rows(_chain(st2, spark, 3))
-    assert st2.computed == ["s1"]      # s2's token still matches the chain
+    assert st2.computed == recomputed  # s2's token still matches
     assert out1 == out2
+    # a token-only file has no record until its stage is rewritten
+    assert sorted(r["stage"] for r in st2.state().collect()) == \
+        (["s1", "s2"] if recomputed else [])
 
 
 def test_fingerprint_change_invalidates_stale_stages(spark, tmp_path):
@@ -114,6 +156,49 @@ def test_pipeline_resume_byte_identical(spark, tmp_path):
     assert _rows(res3.assignments.select("file_id", "cluster_id")) == a1
 
 
+def test_recomputed_stage_replaces_its_record(spark, tmp_path):
+    """After a fingerprint change recomputes every stage, each stage has
+    one state() row, and its lineage names exactly its parts on disk."""
+    root = str(tmp_path / "store")
+    _chain(StageStore(spark, root, fingerprint="fp-a"), spark, 3)
+    st = StageStore(spark, root, fingerprint="fp-b")
+    _chain(st, spark, 5)
+    assert st.computed == ["s1", "s2"]
+    assert sorted(r["stage"] for r in st.state().collect()) == ["s1", "s2"]
+    lineage = st.lineage().collect()
+    for stage in ("s1", "s2"):
+        on_disk = [n for n in os.listdir(f"{root}/{stage}") if n.endswith(".parquet")]
+        assert sorted(r["part"] for r in lineage if r["stage"] == stage) == \
+            sorted(on_disk)
+    assert not {"_state", "_lineage"} & set(os.listdir(root))
+
+
+def test_stage_write_launches_no_more_jobs_than_a_plain_write(spark, tmp_path):
+    """A fresh stage costs the Spark jobs of a plain parquet write and its
+    read-back: keeping the stage's record launches none."""
+    sc = spark.sparkContext
+    df = spark.range(1000, numPartitions=16)
+
+    def n_jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    store = StageStore(spark, str(tmp_path / "store"), fingerprint="fp-a")
+    n_store = n_jobs("stage-write-store", lambda: store.run("s1", lambda: df))
+    plain = str(tmp_path / "plain")
+    n_plain = n_jobs(
+        "stage-write-plain",
+        lambda: (df.write.parquet(plain), spark.read.parquet(plain)),
+    )
+    assert store.computed == ["s1"]
+    assert 0 < n_store <= n_plain
+
+
 def test_resume_ignores_stage_order(spark, tmp_path):
     root = str(tmp_path / "store")
     st1 = StageStore(spark, root, fingerprint="fp-a")
@@ -128,9 +213,9 @@ def test_resume_ignores_stage_order(spark, tmp_path):
 
 
 def test_concurrent_runs_record_every_stage(spark, tmp_path):
-    """Stage dirs are distinct, but _state/_lineage are shared append
-    tables: concurrent run() calls must not lose or fail their rows.  More
-    threads than local[4] cores, with a short switch interval."""
+    """Concurrent run() calls each write their own stage dir and record
+    file: none may lose or fail its record.  More threads than local[4]
+    cores, with a short switch interval."""
     root = str(tmp_path / "store")
     st = StageStore(spark, root, fingerprint="fp-a")
     names = [f"t{i}" for i in range(6)]
@@ -254,5 +339,8 @@ def test_job_resume_subprocess(tmp_path):
     r2 = run()
     assert r1["computed_stages"] != []
     assert r2["computed_stages"] == []
+    # one record per stage; a resume rewrites none of them
+    assert set(r1["computed_stages"]) <= {s["stage"] for s in r1["stages"]}
+    assert r2["stages"] == r1["stages"]
     assert (r1["files"], r1["clusters"], r1["dup_edges"]) == \
            (r2["files"], r2["clusters"], r2["dup_edges"])
