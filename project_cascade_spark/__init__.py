@@ -25,8 +25,8 @@ sources/                 schema-pinned readers + checkpointed sinks with a
                          stage-state table (resume semantics of the
                          reference's os.path.exists guards,
                          reference: Regional_Run_Files/data_matching.py:47-73).
-plans/                   end-to-end pipeline orchestration.
-streaming/               Structured Streaming ingest of the events table.
+plans/                   end-to-end pipeline orchestration, incremental
+                         batch append and compaction.
 datagen.py               deterministic code_files generator with planted
                          near-dup groups (ground truth for recall tests).
 oracle.py                DuckDB-dialect SQL generators mirroring every

@@ -62,15 +62,6 @@ def add_minhash(
     return df.withColumn(out_col, minhash_expr(hashes, cfg))
 
 
-def explode_bands(
-    df: DataFrame, id_col: str, sig_col: str, cfg: CascadeConfig
-) -> DataFrame:
-    """(id, band) rows — one per LSH band."""
-    return df.select(
-        F.col(id_col), F.explode(band_keys(F.col(sig_col), cfg)).alias("band")
-    )
-
-
 def cap_bucket_rows(
     df: DataFrame,
     bucket_cols: str | list[str],

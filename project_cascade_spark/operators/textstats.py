@@ -1,5 +1,5 @@
 """Text-analysis operators for a training-data pipeline: language ID,
-quality scoring, token counting, document fingerprinting.
+quality scoring, token counting.
 
 All pure Catalyst expressions (whole-stage codegen) with exact DuckDB twins
 in oracle.py.  These run over the `documents` table in the correctness gate
@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hash60
 from ..functions.text import normalize_ws
 
 # Tiny, deterministic stopword lists — a heuristic language classifier in
@@ -97,8 +96,3 @@ def token_counts(df: DataFrame, text_col: str) -> DataFrame:
         "bpe_tokens", bpe.cast("long")
     )
 
-
-def add_fingerprint(df: DataFrame, text_col: str, out_col: str = "doc_fp") -> DataFrame:
-    """60-bit document fingerprint of the normalized text — equal
-    fingerprints ⇒ near-certain duplicates after normalization."""
-    return df.withColumn(out_col, hash60(normalize_ws(F.col(text_col))))

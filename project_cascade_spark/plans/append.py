@@ -4,7 +4,7 @@ dedup run without re-shingling the corpus.
 The reference re-runs a whole region when new source rows arrive
 (runfile.py's convert→match→cluster chain runs front-to-back every time);
 at 10^12-file scale a daily increment must not pay a corpus re-scan.  This
-module is the batch analogue of streaming/incremental.py: given a completed
+module is the engine's one incremental path: given a completed
 base run's StageStore (stages 00..05 durable in --workdir), only the new
 files are hashed/normalized/shingled, candidate generation is restricted
 to pairs that TOUCH a new representative (band join new-side × all-side —

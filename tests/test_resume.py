@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 
 from project_cascade_spark.sources.sinks import StageStore
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _chain(store: StageStore, spark, mult: int):
     """Two-stage chain whose output depends on `mult` (stands in for config)."""
@@ -330,7 +332,7 @@ def test_job_resume_subprocess(tmp_path):
             [sys.executable, "-m", "project_cascade_spark.jobs.dedup_job",
              "--input", "synth:200", "--workdir", wd,
              "--master", "local[4]", "--no-substring-pass", "--report"],
-            capture_output=True, text=True, check=True, cwd="/root/repo",
+            capture_output=True, text=True, check=True, cwd=REPO,
         )
         line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
         return json.loads(line)
